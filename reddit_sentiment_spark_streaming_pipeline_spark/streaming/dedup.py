@@ -5,17 +5,9 @@ growing fingerprint store — the streaming twin of the batch
 Each micro-batch of incoming documents computes md5 fingerprints,
 anti-joins the durable fingerprint store (parquet), writes the
 newly-admitted fingerprints into the store under the batch's OWN
-`batch_id=N` partition, and records one stats row per batch.
-Micro-batches execute sequentially, so the read-check-append cycle is
-race-free. Replay (foreachBatch's actual retry semantics: a crash after
-the side effects but before the checkpoint commit re-runs the batch) is
-DETERMINISTICALLY idempotent: the anti-join reads only partitions
-`batch_id < N` — never the batch's own possibly-partial partition — so
-the replay recomputes the identical admitted set and mode("overwrite")
-on its own partition repairs any partial write. Stats follow the same
-per-partition overwrite, so a replayed batch's row keeps the TRUE
-admitted count (a membership-only gate would repair it to 0 — the
-store would stay right but the accounting would lie).
+`batch_id=N` partition, and records one stats row per batch — the
+batch-owned store layout whose replay contract streaming/stats.py
+states once for every gate.
 
 At 100 TB the store is a fingerprint-only table: 16-byte keys, orders of
 magnitude smaller than the corpus. The per-batch anti-join shuffles only
@@ -28,17 +20,36 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from reddit_sentiment_spark_streaming_pipeline_spark.functions.hashing import hamming_expr
 from reddit_sentiment_spark_streaming_pipeline_spark.operators.curation import (
+    arrival_seq_col,
     snapshot_existing,
     snapshot_incoming,
 )
-from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import _order_files_by_name
-from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import write_stats_row
+from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import (
+    HAMMING_THRESHOLD,
+    simhash_chunk_rows,
+    simhash_fp,
+)
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import (
+    read_chunk_stream,
+    write_chunks,
+)
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import (
+    _compact_tmp_dirs,
+    assert_store_not_mid_compaction,  # noqa: F401 — re-exported for callers
+    count_true,
+    hadoop_fs,
+    prior_partitions,
+    start_gate,
+    write_partition,
+    write_stats_row,
+)
 
 DOC_CHUNK_SCHEMA = "doc_id bigint, text string, source string"
 
@@ -53,6 +64,22 @@ ARRIVAL_CHUNK_SCHEMA = DOC_CHUNK_SCHEMA + ", arrival_seq string"
 # Durable fingerprint store layout: data columns + the batch-owned
 # partition column (from the batch_id=N directory names).
 STORE_SCHEMA = "fingerprint string, doc_id bigint, source string, batch_id bigint"
+
+GATE_STATS_SCHEMA = "n_batch long, n_admitted long, n_rejected long"
+
+
+def arrival_cols(df: DataFrame) -> list[str]:
+    """``["arrival_seq"]`` when the frame carries the arrival-order
+    column, else ``[]``. With it, every within-batch precedence orders
+    by (arrival_seq, doc_id) — first-SEEN-wins — and every store row
+    blocks (it arrived in a strictly earlier batch); without it the
+    id-ordered-replay rules order by doc_id."""
+    return ["arrival_seq"] if "arrival_seq" in df.columns else []
+
+
+def _snapshot_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    existing = snapshot_existing(spark, sf_dir)
+    return existing.unionByName(snapshot_incoming(existing))
 
 
 def write_doc_chunks(spark: SparkSession, sf_dir: str, out_dir: str,
@@ -70,26 +97,12 @@ def write_doc_chunks(spark: SparkSession, sf_dir: str, out_dir: str,
     covered by the gate's within-batch keep-first window instead.
     Returns the corpus row count.
     """
-    existing = snapshot_existing(spark, sf_dir)
-    corpus = existing.unionByName(snapshot_incoming(existing))
-    n = corpus.count()
-    (
-        corpus.repartitionByRange(n_chunks, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _order_files_by_name(out_dir, ".parquet")
-    return n
+    return write_chunks(_snapshot_corpus(spark, sf_dir), out_dir, n_chunks, "doc_id")
 
 
 def read_doc_stream(spark: SparkSession, chunk_dir: str,
                     max_files_per_trigger: int = 1) -> DataFrame:
-    return (
-        spark.readStream.schema(DOC_CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(chunk_dir)
-    )
+    return read_chunk_stream(spark, chunk_dir, DOC_CHUNK_SCHEMA, max_files_per_trigger)
 
 
 def write_doc_chunks_arrival(spark: SparkSession, sf_dir: str, out_dir: str,
@@ -100,69 +113,22 @@ def write_doc_chunks_arrival(spark: SparkSession, sf_dir: str, out_dir: str,
     crawl would — id order scrambled, resubmits often arriving before
     their originals. The gate driven over these chunks must land the
     arrival_order_exact_gate twin's admission set exactly."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.curation import (
-        arrival_seq_col,
-        snapshot_existing,
-        snapshot_incoming,
-    )
-
-    existing = snapshot_existing(spark, sf_dir)
-    corpus = existing.unionByName(snapshot_incoming(existing)).withColumn(
-        "arrival_seq", arrival_seq_col()
-    )
-    n = corpus.count()
-    (
-        corpus.repartitionByRange(n_chunks, "arrival_seq")
-        .sortWithinPartitions("arrival_seq")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _order_files_by_name(out_dir, ".parquet")
-    return n
+    corpus = _snapshot_corpus(spark, sf_dir).withColumn("arrival_seq", arrival_seq_col())
+    return write_chunks(corpus, out_dir, n_chunks, "arrival_seq")
 
 
 def read_doc_stream_arrival(spark: SparkSession, chunk_dir: str,
                             max_files_per_trigger: int = 1) -> DataFrame:
-    return (
-        spark.readStream.schema(ARRIVAL_CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(chunk_dir)
-    )
-
-
-def _store_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem resolved FOR the path.
-
-    `os.path.isdir` only sees the driver's local filesystem; on any
-    non-local store root (hdfs://, s3a://) it would always report the
-    store absent and every batch would silently re-admit everything.
-    Resolving the FileSystem from the Path itself makes the check correct
-    for whichever scheme the deployment uses, and a real FS error (auth,
-    network) still propagates and fails the batch.
-    """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    return bool(fs.exists(jpath))
+    return read_chunk_stream(spark, chunk_dir, ARRIVAL_CHUNK_SCHEMA, max_files_per_trigger)
 
 
 # Most batch fingerprints we'd ever pin executor-resident: md5 hex +
 # join-row overhead ≈ 80 B/row, 2M rows ≈ 160 MB — same sizing logic as
-# the span join-back's SPAN_REP_BROADCAST_MAX (operators/dedup.py).
-# Rehearsal-only env override SPARK_GRAFT_GATE_BATCH_BROADCAST_MAX (the
-# operators/dedup.py _env_gate convention): setting it to 0 forces every
-# batch through the shuffle-hash fallback so the post-switch regime's
-# behavior can be driven at volume, not just plan-pinned; unset, byte-
-# identical to the constant.
+# the span join-back's SPAN_REP_BROADCAST_MAX (operators/dedup.py). The
+# gates read it at call time, so a rehearsal that sets it to 0 forces
+# every batch through the shuffle-hash fallback and drives the
+# post-switch regime at volume, not just plan-pinned.
 GATE_BATCH_BROADCAST_MAX = 2_000_000
-
-
-def _gate_batch_max() -> int:
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import _env_gate
-
-    return _env_gate("SPARK_GRAFT_GATE_BATCH_BROADCAST_MAX",
-                     GATE_BATCH_BROADCAST_MAX)
 
 
 def novel_against_store(firsts: DataFrame, store: DataFrame,
@@ -188,7 +154,7 @@ def novel_against_store(firsts: DataFrame, store: DataFrame,
     slow-but-correct) instead of the broadcast OOM-ing the driver.
     ``batch_rows=None`` (tests, plan dumps) keeps the broadcast shape.
     """
-    if batch_rows is not None and batch_rows > _gate_batch_max():
+    if batch_rows is not None and batch_rows > GATE_BATCH_BROADCAST_MAX:
         return firsts.join(
             store.hint("shuffle_hash"), "fingerprint", "left_anti"
         )
@@ -206,147 +172,44 @@ def gate_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     keep-first rule as the batch operators) — or the first arrival_seq
     when the stream carries one (ARRIVAL_CHUNK_SCHEMA: first-seen-wins
     for unordered ingestion); cross-batch collisions are rejected by
-    the store anti-join. The store read is gated on the
-    path existing on the store's OWN filesystem (Hadoop FileSystem API,
-    not the driver's local disk) — and NOT on a broad exception swallow —
-    so a real read failure (corrupt part file, FS error) propagates and
-    fails the batch instead of silently re-admitting everything as
-    "first batch".
+    the store anti-join against the batch's `prior_partitions` view.
     """
     spark = batch_df.sparkSession
-    # persist the fingerprint projection ONCE: the three actions below
-    # (batch count, admitted count, store append) would otherwise each
-    # re-scan the streaming source — 3× the input read per micro-batch
-    # (and a 3×-inflated numInputRows in query progress)
-    # first-SEEN-wins: a stream carrying an explicit arrival_seq (the
-    # arrival-order chunk layout) keeps its within-batch first ARRIVAL
-    # per fingerprint; without one, doc_id is the within-batch order
-    # (the id-ordered replay premise). Cross-batch order is batch order
-    # either way — the store anti-join below.
-    arrival = "arrival_seq" in batch_df.columns
-    cols = ["doc_id", "source"] + (["arrival_seq"] if arrival else [])
+    # persist the fingerprint projection ONCE: the actions below (batch
+    # count, store write) would otherwise each re-scan the streaming
+    # source — 2× the input read per micro-batch (and an inflated
+    # numInputRows in query progress)
+    arrival = arrival_cols(batch_df)
     fps = batch_df.select(
-        *cols, F.md5("text").alias("fingerprint")
+        "doc_id", "source", *arrival, F.md5("text").alias("fingerprint")
     ).persist()
     try:
-        order = (["arrival_seq", "doc_id"] if arrival else ["doc_id"])
-        w = Window.partitionBy("fingerprint").orderBy(*order)
+        w = Window.partitionBy("fingerprint").orderBy(*arrival, "doc_id")
         firsts = (
             fps.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
         n_batch = fps.count()
-        # a crashed compaction's delete→rename window leaves the store
-        # missing one partition — reading it would silently re-admit
-        # those fingerprints, so fail loudly instead (one parent-dir
-        # listing; zero cost in any healthy state)
-        assert_store_not_mid_compaction(spark, store_dir)
-        # Explicit schema (no footer inference: a killed run can leave a
-        # partial part file in THIS batch's partition, and inference might
-        # sample exactly that file); batch_id < N prunes the batch's own
-        # partition out of the scan entirely, so a replay anti-joins the
-        # same store state the original run saw.
-        store = (
-            spark.read.schema(STORE_SCHEMA)
-            .parquet(store_dir)
-            .filter(F.col("batch_id") < batch_id)
-            .select("fingerprint")
-            if _store_path_exists(spark, store_dir)
-            else None
-        )
+        store = prior_partitions(spark, store_dir, STORE_SCHEMA, batch_id)
         admitted = (
             firsts if store is None
-            else novel_against_store(firsts, store, batch_rows=n_batch)
+            else novel_against_store(firsts, store.select("fingerprint"),
+                                     batch_rows=n_batch)
         )
-        # the admitted count rides the store write as an observed metric
-        # (one action instead of count + write; the admitted frame now
-        # has a single consumer, so its persist is gone too — r13,
-        # guide §1.2: fewer passes per micro-batch)
-        obs = Observation()
-        (
-            admitted.observe(obs, F.count(F.lit(1)).alias("n"))
-            .select("fingerprint", "doc_id", "source")
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
-        )
-        n_admitted = int(obs.get["n"])
+        n_admitted = write_partition(
+            admitted, store_dir, batch_id, "fingerprint", "doc_id", "source",
+            n=F.count(F.lit(1)),
+        )["n"]
     finally:
         fps.unpersist()
-    # one stats row per batch, idempotent under replay: the batch owns its
-    # batch_id=N partition and overwrites it (batch_id comes back as the
-    # partition column on read); written driver-side — see streaming/stats.py
-    write_stats_row(
-        spark, stats_dir, batch_id,
-        "n_batch long, n_admitted long, n_rejected long",
-        (n_batch, n_admitted, n_batch - n_admitted),
-    )
+    write_stats_row(spark, stats_dir, batch_id, GATE_STATS_SCHEMA,
+                    (n_batch, n_admitted, n_batch - n_admitted))
 
 
 def read_gate_stats(spark: SparkSession, out_root: str) -> DataFrame:
     """Per-batch admission stats with batch_id recovered from partitions."""
     return spark.read.parquet(os.path.join(out_root, "gate_stats"))
-
-
-def _store_fs(spark: SparkSession, store_dir: str):
-    """(fs, Path-class) for the store's own filesystem (see
-    _store_path_exists for why os.* is wrong here)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(store_dir).getFileSystem(hconf)
-    return fs, hpath
-
-
-def _compact_tmp_dirs(spark: SparkSession, store_dir: str) -> list[tuple[int, str, bool]]:
-    """All sibling ``<store>.compact_tmp_<d>`` dirs as (d, path, complete).
-
-    Complete means the parquet commit marker ``_SUCCESS`` exists — the
-    same token compact_store's own tmp-reuse keys on. The scan is one
-    listing of the store's parent directory on the store's filesystem
-    (zero entries in any healthy state)."""
-    fs, hpath = _store_fs(spark, store_dir)
-    base = store_dir.rstrip("/")
-    parent = hpath(base).getParent()
-    prefix = hpath(base).getName() + ".compact_tmp_"
-    out = []
-    if parent is None or not fs.exists(parent):
-        return out
-    for status in fs.listStatus(parent):
-        name = status.getPath().getName()
-        if not name.startswith(prefix):
-            continue
-        suffix = name[len(prefix):]
-        if not suffix.isdigit():
-            continue  # e.g. a crashed ".merge" scratch dir — rebuildable
-        path = status.getPath().toString()
-        complete = fs.exists(hpath(path + "/_SUCCESS"))
-        out.append((int(suffix), path, complete))
-    return out
-
-
-def assert_store_not_mid_compaction(spark: SparkSession, store_dir: str) -> None:
-    """Refuse to read a store that a crashed compaction left PARTIAL.
-
-    A compact_store crash between its delete(batch_id=dest) and rename
-    leaves the dest rows' only copy in a complete ``.compact_tmp_<dest>``
-    sibling. A gate that reads the store in that state silently
-    re-admits every document whose fingerprint lived in dest. This check
-    (one parent-dir listing, zero cost in any healthy state) turns that
-    silent corruption into a loud failure telling the operator to re-run
-    compact_store first. An incomplete tmp, or a complete tmp whose
-    batch partition still exists, means the prior run crashed BEFORE
-    deleting anything — the store is intact and the gate may proceed."""
-    fs, hpath = _store_fs(spark, store_dir)
-    for d, path, complete in _compact_tmp_dirs(spark, store_dir):
-        part = hpath(os.path.join(store_dir, f"batch_id={d}"))
-        if complete and not fs.exists(part):
-            raise IOError(
-                f"fingerprint store {store_dir} is mid-compaction: "
-                f"batch_id={d} was deleted and its only copy is {path}. "
-                f"Run compact_store(upto_batch_id>={d + 1}) to recover "
-                "before (re)starting the gate."
-            )
 
 
 # Rehearsal-only crash injection for the kill-during-compaction chaos lap
@@ -445,18 +308,16 @@ def compact_store(spark: SparkSession, store_dir: str,
     consolidated partition plus benign leftover duplicates that the
     re-run's dropDuplicates folds away. A gate restarted while the
     store sits in window 2 refuses loudly instead of reading the
-    partial store (assert_store_not_mid_compaction, wired into
-    gate_batch). Idempotent: re-running with the same bound converges
+    partial store (assert_store_not_mid_compaction, run by every gate's
+    stats.prior_partitions read). Idempotent: re-running with the same bound converges
     to the same single consolidated partition.
     """
     dest = upto_batch_id - 1
     if dest < 0:
         return 0
     tmp = store_dir.rstrip("/") + f".compact_tmp_{dest}"
-    # all FS ops go through the store's OWN filesystem (Hadoop FS API,
-    # same rationale as _store_path_exists — os.listdir/os.rename only
-    # see the driver's local disk)
-    fs, hpath = _store_fs(spark, store_dir)
+    # all FS ops go through the store's OWN filesystem (stats.hadoop_fs)
+    fs, hpath = hadoop_fs(spark, store_dir)
     root = hpath(store_dir)
     orphans = []
     for d, path, complete in _compact_tmp_dirs(spark, store_dir):
@@ -587,58 +448,39 @@ NEARDUP_STORE_SCHEMA = (
 )
 
 
-def neardup_rejected(fps: DataFrame, store: DataFrame | None,
-                     batch_rows: int | None = None) -> DataFrame:
-    """Batch doc_ids rejected by a smaller-id SimHash near-match — within
-    the batch or against the (already batch_id-filtered) durable store.
+def near_rejected(a_rows: DataFrame, b_rows: DataFrame,
+                  s_rows: DataFrame | None, batch_rows: int | None,
+                  arrival: bool) -> DataFrame:
+    """Batch doc_ids (pre-distinct) that an EARLIER seen doc near-matches
+    (shares a 16-bit (ci, cv) chunk AND Hamming <= HAMMING_THRESHOLD):
+    `a_rows` are the batch's (ci, cv, d) chunk rows, `b_rows` those batch
+    rows that may block within the batch, `s_rows` the store's blocking
+    chunk rows (already `batch_id < N`) or None. Shared by the near-dup
+    gate and the ingest pipeline's stage 2.
+
+    Earlier means a smaller doc_id — or, for an `arrival` stream, a
+    smaller (arrival_seq, doc_id) within the batch, while EVERY store row
+    blocks (it arrived in a strictly earlier batch).
 
     Normal regime: the store's chunk rows stream map-side against the
     BROADCAST batch chunk rows (the novel_against_store inversion) — the
     store is scanned once and never shuffled, whatever its depth, and
-    Hamming verifies inline so only rejected batch doc_ids survive.
-
-    The inversion pins the batch's chunk rows (4 per doc via
-    simhash_chunk_rows) in every executor, so — exactly like
-    novel_against_store — it is gated on the measured batch size
-    ``batch_rows`` (the count neardup_gate_batch has already paid for).
-    A pathological batch (a backfill replay delivering the whole history
-    in one trigger) above GATE_BATCH_BROADCAST_MAX // 4 docs (÷4: the
-    broadcast carries chunk ROWS, not docs) falls back to sort-free
-    shuffle-hash joins on (ci, cv): the store shuffles once for THAT
-    batch (linear, slow-but-correct) instead of the broadcast pinning
-    4×batch rows per executor or OOM-ing the driver building it. The
-    within-batch self-join takes the same hint in the fallback so a
-    backfill batch never sorts 4×batch rows twice. ``batch_rows=None``
-    (plan dumps) keeps the broadcast shape. Both regimes plan-pinned in
-    tests/test_plans.py; fallback-equals-broadcast admission proven in
-    tests/test_streaming.py.
+    Hamming verifies inline so only rejected batch doc_ids survive. The
+    inversion pins 4 chunk rows per doc in every executor, so it is gated
+    on the measured batch size ``batch_rows``: a backfill-sized batch
+    above GATE_BATCH_BROADCAST_MAX // 4 docs (÷4: the broadcast carries
+    chunk ROWS, not docs) falls back to sort-free shuffle-hash joins on
+    (ci, cv) — the store shuffles once for THAT batch (linear,
+    slow-but-correct) instead of the broadcast OOM-ing the driver, and
+    the within-batch self-join takes the same hint so a backfill batch
+    never sorts 4×batch rows twice. ``batch_rows=None`` (plan dumps)
+    keeps the broadcast shape. Both regimes are plan-pinned in
+    tests/test_plans.py.
     """
-    from reddit_sentiment_spark_streaming_pipeline_spark.functions.hashing import (
-        hamming_expr,
-    )
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import (
-        HAMMING_THRESHOLD,
-        simhash_chunk_rows,
-    )
-
     fallback = (batch_rows is not None
-                and batch_rows > _gate_batch_max() // 4)
-    # first-SEEN-wins: a batch carrying an explicit arrival_seq (the
-    # arrival-order chunk layout) compares within-batch precedence by
-    # (arrival_seq, doc_id) instead of doc_id, and EVERY store row blocks
-    # (store rows arrived in strictly earlier batches, hence earlier) —
-    # the gate_batch exact-gate convention, semantics spec
-    # operators/dedup.py::arrival_order_neardup_gate. Without the column
-    # the id-ordered-replay rule below is unchanged.
-    arrival = "arrival_seq" in fps.columns
-    fp_cols = ["doc_id", "h0", "h1", "h2", "h3"] + (
-        ["arrival_seq"] if arrival else []
-    )
-    bcl = simhash_chunk_rows(
-        fps.select(*fp_cols), extra=("arrival_seq",) if arrival else ()
-    )
-    a = bcl.select("ci", "cv", F.col("d").alias("a"))
-    b = bcl.select("ci", "cv", F.col("d").alias("b"))
+                and batch_rows > GATE_BATCH_BROADCAST_MAX // 4)
+    a = a_rows.select("ci", "cv", F.col("d").alias("a"))
+    b = b_rows.select("ci", "cv", F.col("d").alias("b"))
     if arrival:
         earlier = (F.col("b.arrival_seq") < F.col("a.arrival_seq")) | (
             (F.col("b.arrival_seq") == F.col("a.arrival_seq"))
@@ -647,59 +489,62 @@ def neardup_rejected(fps: DataFrame, store: DataFrame | None,
     else:
         earlier = F.col("b.doc_id") < F.col("a.doc_id")
     ham_ab = F.expr(hamming_expr("a.h", "b.h", "spark"))
-    within = (
+    rej = (
         a.join(b.hint("shuffle_hash") if fallback else b, ["ci", "cv"])
         .filter(earlier)
         .filter(ham_ab <= HAMMING_THRESHOLD)
         .select(F.col("a.doc_id").alias("doc_id"))
     )
-    if store is None:
-        return within
-    scl = simhash_chunk_rows(
-        store.select("doc_id", "h0", "h1", "h2", "h3")
-    ).select("ci", "cv", F.col("d").alias("s"))
-    ham_sb = F.expr(hamming_expr("s.h", "a.h", "spark"))
+    if s_rows is None:
+        return rej
+    ham_sa = F.expr(hamming_expr("s.h", "a.h", "spark"))
     batch_side = a.hint("shuffle_hash") if fallback else F.broadcast(a)
     vs_store = (
-        scl.join(batch_side, ["ci", "cv"])
+        s_rows.select("ci", "cv", F.col("d").alias("s"))
+        .join(batch_side, ["ci", "cv"])
         .filter(
             F.lit(True) if arrival else (F.col("s.doc_id") < F.col("a.doc_id"))
         )
-        .filter(ham_sb <= HAMMING_THRESHOLD)
+        .filter(ham_sa <= HAMMING_THRESHOLD)
         .select(F.col("a.doc_id").alias("doc_id"))
     )
-    return within.unionByName(vs_store)
+    return rej.unionByName(vs_store)
+
+
+def neardup_rejected(fps: DataFrame, store: DataFrame | None,
+                     batch_rows: int | None = None) -> DataFrame:
+    """Batch doc_ids rejected by an earlier SimHash near-match — within
+    the batch or against the (already batch_id-filtered) durable store
+    (`near_rejected`; every batch chunk row may block). ``batch_rows`` is
+    the count neardup_gate_batch has already paid for."""
+    arrival = arrival_cols(fps)
+    bcl = simhash_chunk_rows(
+        fps.select("doc_id", "h0", "h1", "h2", "h3", *arrival), extra=tuple(arrival)
+    )
+    scl = None if store is None else simhash_chunk_rows(
+        store.select("doc_id", "h0", "h1", "h2", "h3")
+    )
+    return near_rejected(bcl, bcl, scl, batch_rows, bool(arrival))
 
 
 def neardup_gate_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
                        stats_dir: str) -> None:
-    """Admit each batch doc iff NO smaller-id seen doc is a SimHash
+    """Admit each batch doc iff NO earlier seen doc is a SimHash
     near-match (shares a 16-bit chunk AND Hamming <= 8) — the streaming
     production path of the batch `incremental_neardup_gate` twin
     (operators/dedup.py), which is the oracle-checked semantics spec.
     For id-ordered replay (write_doc_chunks' range partitioning) the
     drained admission set is EXACTLY the batch twin's, proven by
-    tests/test_streaming.py::test_neardup_gate_matches_batch_twin.
+    tests/test_streaming.py::test_neardup_gate_matches_batch_twin. Every
+    batch writes ALL its rows, admitted flagged, into its own store
+    partition: a rejected doc must keep blocking its later near-copies.
 
-    Replay contract is the exact gate's (gate_batch): candidates read
-    only store partitions `batch_id < N`, every batch overwrites its OWN
-    `batch_id=N` partition with ALL its rows (admitted flagged), and the
-    stats row is per-partition overwritten — a foreachBatch replay
-    recomputes the identical decision set.
-
-    Scale shape: see neardup_rejected — store never shuffled in the
-    normal regime (chunk rows stream map-side vs the broadcast batch),
-    with the broadcast gated on the measured batch size and a sort-free
-    shuffle-hash fallback for backfill-sized batches. A degenerate
-    chunk value whose store bucket floods grows the per-batch verify
-    linearly with that bucket — bounded by the store scan the gate
-    already pays, never by |store|^2.
+    Scale shape: see near_rejected — store never shuffled in the normal
+    regime. A degenerate chunk value whose store bucket floods grows the
+    per-batch verify linearly with that bucket — bounded by the store
+    scan the gate already pays, never by |store|^2.
     """
     spark = batch_df.sparkSession
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import (
-        simhash_fp,
-    )
-
     # persist ONE projection of the batch and materialize it up front:
     # the plan below references the batch twice (token rows for the
     # fingerprint aggregate + the source-column join-back), which would
@@ -712,8 +557,7 @@ def neardup_gate_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     # end: a backfill-sized micro-batch must not keep corpus-sized text
     # blocks resident while the store joins and partition writes run
     # (gate_batch persists only its md5 projection for the same reason).
-    arrival = "arrival_seq" in batch_df.columns
-    side_cols = ["doc_id", "source"] + (["arrival_seq"] if arrival else [])
+    side_cols = ["doc_id", "source", *arrival_cols(batch_df)]
     base = batch_df.select("doc_id", "text", *side_cols[1:]).persist()
     fp = simhash_fp(base.select("doc_id", "text"))
     fps = fp.join(base.select(*side_cols), "doc_id").persist()
@@ -721,14 +565,7 @@ def neardup_gate_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
         base.count()
         n_batch = fps.count()
         base.unpersist()
-        assert_store_not_mid_compaction(spark, store_dir)
-        store = None
-        if _store_path_exists(spark, store_dir):
-            store = (
-                spark.read.schema(NEARDUP_STORE_SCHEMA)
-                .parquet(store_dir)
-                .filter(F.col("batch_id") < batch_id)
-            )
+        store = prior_partitions(spark, store_dir, NEARDUP_STORE_SCHEMA, batch_id)
         rejected = (
             neardup_rejected(fps, store, batch_rows=n_batch)
             .distinct().withColumn("r", F.lit(1))
@@ -737,24 +574,13 @@ def neardup_gate_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
             "doc_id", "source", "h0", "h1", "h2", "h3",
             F.col("r").isNull().alias("admitted"),
         )
-        # the admitted count rides the store write as an observed metric
-        # (one action instead of count + write; out now has a single
-        # consumer, so its persist is gone too — r13, guide §1.2)
-        obs = Observation()
-        out.observe(
-            obs, F.coalesce(F.sum(F.col("admitted").cast("long")), F.lit(0)).alias("n")
-        ).write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
-        n_admitted = int(obs.get["n"])
+        n_admitted = write_partition(out, store_dir, batch_id,
+                                     n=count_true("admitted"))["n"]
     finally:
         fps.unpersist()
         base.unpersist()
-    write_stats_row(
-        spark, stats_dir, batch_id,
-        "n_batch long, n_admitted long, n_rejected long",
-        (n_batch, n_admitted, n_batch - n_admitted),
-    )
+    write_stats_row(spark, stats_dir, batch_id, GATE_STATS_SCHEMA,
+                    (n_batch, n_admitted, n_batch - n_admitted))
 
 
 def read_neardup_store(spark: SparkSession, out_root: str) -> DataFrame:
@@ -767,48 +593,26 @@ def read_neardup_stats(spark: SparkSession, out_root: str) -> DataFrame:
 
 def start_neardup_gate(docs_stream: DataFrame, out_root: str,
                        after_batch_hook=None) -> StreamingQuery:
-    """foreachBatch NEAR-dup gate with a durable checkpoint under its own
-    output root (don't share a root with the exact gate — each owns
-    `<root>/_checkpoint`). Same hook contract as start_dedup_gate."""
+    """foreachBatch NEAR-dup gate under its own output root (don't share
+    a root with the exact gate); wiring and hook contract: stats.start_gate."""
     store_dir = os.path.join(out_root, "neardup_store")
     stats_dir = os.path.join(out_root, "neardup_stats")
-
-    def _fn(df: DataFrame, bid: int) -> None:
-        neardup_gate_batch(df, bid, store_dir, stats_dir)
-        if after_batch_hook is not None:
-            after_batch_hook(bid)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))
-        .queryName("neardup_gate")
-        .start()
+    return start_gate(
+        docs_stream, out_root, "neardup_gate",
+        lambda df, bid: neardup_gate_batch(df, bid, store_dir, stats_dir),
+        after_batch_hook,
     )
 
 
 def start_dedup_gate(docs_stream: DataFrame, out_root: str,
                      after_batch_hook=None) -> StreamingQuery:
-    """foreachBatch gate with a durable checkpoint under the output root.
-
-    ``after_batch_hook(batch_id)``, if given, runs after the batch's side
-    effects (store partition + stats row written) but BEFORE Structured
-    Streaming commits the batch to the checkpoint — a hook that raises
-    lands the crash in exactly the window where foreachBatch's replay
-    semantics bite. Used by the chaos scenario in
-    tools/streaming_rehearsal.py to prove kill/resume equivalence; never
-    set in production wiring.
-    """
+    """foreachBatch exact-dedup gate under its own output root; wiring
+    and the ``after_batch_hook(batch_id)`` crash-injection contract:
+    stats.start_gate."""
     store_dir = os.path.join(out_root, "fingerprint_store")
     stats_dir = os.path.join(out_root, "gate_stats")
-
-    def _fn(df: DataFrame, bid: int) -> None:
-        gate_batch(df, bid, store_dir, stats_dir)
-        if after_batch_hook is not None:
-            after_batch_hook(bid)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))
-        .queryName("dedup_gate")
-        .start()
+    return start_gate(
+        docs_stream, out_root, "dedup_gate",
+        lambda df, bid: gate_batch(df, bid, store_dir, stats_dir),
+        after_batch_hook,
     )

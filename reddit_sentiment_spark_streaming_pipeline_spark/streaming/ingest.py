@@ -21,15 +21,13 @@ unconditionally (it arrived in a strictly earlier batch); semantics
 spec operators/ingest.py::arrival_order_ingest_pipeline. Without the
 column, id-ordered replay keeps the smaller-id rules below.
 
-Replay contract (the gate_batch contract, three stores wide): candidate
-reads filter `batch_id < N`; every batch overwrites its OWN batch_id=N
-partition in the exact store (admitted fingerprints), the near-dup
-store (ALL stage-1 survivors, admission + per-chunk blk flags — a
-stage-2-rejected doc keeps blocking whenever it holds a blocker slot,
-which a flood family's first arrivals always do), the per-doc results
-table (all flags), and the stats table — so a
-crash-after-side-effects-before-commit replay recomputes the identical
-decision set and repairs partial writes.
+Replay contract: the batch-owned layout of streaming/stats.py, three
+stores wide. Every batch overwrites its OWN batch_id=N partition in the
+exact store (admitted fingerprints), the near-dup store (ALL stage-1
+survivors, admission + per-chunk blk flags — a stage-2-rejected doc
+keeps blocking whenever it holds a blocker slot, which a flood family's
+first arrivals always do), the per-doc results table (all flags), and
+the stats table.
 
 Scale shape: both store joins are the inverted broadcast-batch form
 with the measured batch-size gate and sort-free shuffle-hash fallback
@@ -52,28 +50,46 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from reddit_sentiment_spark_streaming_pipeline_spark.functions.hashing import (
-    SIMHASH_CHUNKS,
-    hamming_expr,
+from reddit_sentiment_spark_streaming_pipeline_spark.functions.hashing import SIMHASH_CHUNKS
+from reddit_sentiment_spark_streaming_pipeline_spark.operators.curation import arrival_seq_col
+from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import (
+    simhash_chunk_rows,
+    simhash_fp,
+)
+from reddit_sentiment_spark_streaming_pipeline_spark.operators.ingest import (
+    NEARDUP_BLOCKER_CAP,
+    ingest_corpus,
+)
+from reddit_sentiment_spark_streaming_pipeline_spark.operators.selection import (
+    dsir_features,
+    dsir_score_against_model,
 )
 from reddit_sentiment_spark_streaming_pipeline_spark.streaming.dedup import (
-    _gate_batch_max,
-    _store_path_exists,
-    assert_store_not_mid_compaction,
+    arrival_cols,
+    near_rejected,
     novel_against_store,
 )
-from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import _order_files_by_name
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import (
+    read_chunk_stream,
+    write_chunks,
+)
 from reddit_sentiment_spark_streaming_pipeline_spark.streaming.selection import (
     freeze_selection_model,
     read_selection_model,
     read_selection_stream,
 )
-from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import write_stats_row
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import (
+    count_true,
+    prior_partitions,
+    start_gate,
+    write_partition,
+    write_stats_row,
+)
 
 # Store layouts (explicit read schemas — no footer inference). The
 # near-dup store's blk0..blk3 flags mark, per chunk, whether this row is
@@ -99,18 +115,7 @@ def write_ingest_chunks(spark: SparkSession, sf_dir: str, out_dir: str,
     resubmits and tail-edited near copies — operators/ingest.py), range-
     partitioned on doc_id so replay is id-ordered (the batching-
     invariance premise of the keep-first / smaller-id rules)."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.ingest import ingest_corpus
-
-    corpus = ingest_corpus(spark, sf_dir)
-    n = corpus.count()
-    (
-        corpus.repartitionByRange(n_chunks, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _order_files_by_name(out_dir, ".parquet")
-    return n
+    return write_chunks(ingest_corpus(spark, sf_dir), out_dir, n_chunks, "doc_id")
 
 
 # chunk schema == the selection stream's (doc_id, text, lang, source)
@@ -132,30 +137,14 @@ def write_ingest_chunks_arrival(spark: SparkSession, sf_dir: str,
     arrival_order_ingest_pipeline twin's flag set exactly (batch order
     supplies cross-batch precedence; the arrival-ranged layout makes it
     consistent with the twin's global (arrival_seq, doc_id) rule)."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.curation import arrival_seq_col
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.ingest import ingest_corpus
-
-    corpus = ingest_corpus(spark, sf_dir).withColumn(
-        "arrival_seq", arrival_seq_col()
-    )
-    n = corpus.count()
-    (
-        corpus.repartitionByRange(n_chunks, "arrival_seq")
-        .sortWithinPartitions("arrival_seq")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _order_files_by_name(out_dir, ".parquet")
-    return n
+    corpus = ingest_corpus(spark, sf_dir).withColumn("arrival_seq", arrival_seq_col())
+    return write_chunks(corpus, out_dir, n_chunks, "arrival_seq")
 
 
 def read_ingest_stream_arrival(spark: SparkSession, chunk_dir: str,
                                max_files_per_trigger: int = 1) -> DataFrame:
-    return (
-        spark.readStream.schema(INGEST_ARRIVAL_CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(chunk_dir)
-    )
+    return read_chunk_stream(spark, chunk_dir, INGEST_ARRIVAL_CHUNK_SCHEMA,
+                             max_files_per_trigger)
 
 
 def _store_blocker_rows(store: DataFrame) -> DataFrame:
@@ -193,12 +182,10 @@ def stage2_ranked(fp2: DataFrame, sbl: DataFrame | None,
     is at most SIMHASH_CHUNKS x 2^16, so it always broadcasts; the store
     itself is never ranked, windowed, or shuffled (plan-pinned by
     tests/test_plans.py::test_ingest_stage2_*)."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import simhash_chunk_rows
-
-    cl2 = simhash_chunk_rows(fp2, extra=("arrival_seq",) if arrival else ())
-    order_cols = ["arrival_seq", "doc_id"] if arrival else ["doc_id"]
+    arrival_seq = ["arrival_seq"] if arrival else []
+    cl2 = simhash_chunk_rows(fp2, extra=tuple(arrival_seq))
     wb = Window.partitionBy("ci", "cv").orderBy(
-        *[F.col(f"d.{c}") for c in order_cols]
+        *[F.col(f"d.{c}") for c in (*arrival_seq, "doc_id")]
     )
     ranked = cl2.withColumn("rn", F.row_number().over(wb))
     if sbl is not None:
@@ -216,219 +203,129 @@ def stage2_rejected(ranked: DataFrame, sbl: DataFrame | None,
     """Stage-2 rejections (doc_id rows, pre-distinct): batch members
     blocked by an earlier CAPPED-set blocker — within-batch (grk <=
     NEARDUP_BLOCKER_CAP members of shared buckets) or from the store's
-    blk-flagged subset. Broadcast regime gated on the measured batch
-    size with the sort-free shuffle-hash fallback — the
-    novel_against_store / near-dup gate convention (÷4: chunk rows per
-    doc); in the default regime the store branch streams map-side
-    against the broadcast batch and contributes zero exchanges."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import HAMMING_THRESHOLD
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.ingest import NEARDUP_BLOCKER_CAP
-
-    fallback = (batch_rows is not None
-                and batch_rows > _gate_batch_max() // 4)
-    a = ranked.select("ci", "cv", F.col("d").alias("a"))
-    bb = ranked.filter(F.col("grk") <= NEARDUP_BLOCKER_CAP).select(
-        "ci", "cv", F.col("d").alias("b")
-    )
-    if arrival:
-        earlier = (F.col("b.arrival_seq") < F.col("a.arrival_seq")) | (
-            (F.col("b.arrival_seq") == F.col("a.arrival_seq"))
-            & (F.col("b.doc_id") < F.col("a.doc_id"))
-        )
-    else:
-        earlier = F.col("b.doc_id") < F.col("a.doc_id")
-    ham_ab = F.expr(hamming_expr("a.h", "b.h", "spark"))
-    rej = (
-        a.join(bb.hint("shuffle_hash") if fallback else bb, ["ci", "cv"])
-        .filter(earlier)
-        .filter(ham_ab <= HAMMING_THRESHOLD)
-        .select(F.col("a.doc_id").alias("doc_id"))
-    )
-    if sbl is not None:
-        ham_sa = F.expr(hamming_expr("s.h", "a.h", "spark"))
-        batch_side = a.hint("shuffle_hash") if fallback else F.broadcast(a)
-        vs_store = (
-            sbl.select("ci", "cv", F.col("d").alias("s"))
-            .join(batch_side, ["ci", "cv"])
-            .filter(
-                F.lit(True) if arrival
-                else (F.col("s.doc_id") < F.col("a.doc_id"))
-            )
-            .filter(ham_sa <= HAMMING_THRESHOLD)
-            .select(F.col("a.doc_id").alias("doc_id"))
-        )
-        rej = rej.unionByName(vs_store)
-    return rej
+    blk-flagged subset. The joins, precedence, Hamming verify and the
+    batch-size-gated broadcast/shuffle-hash choice are the near-dup
+    gate's (streaming/dedup.py::near_rejected)."""
+    blockers = ranked.filter(F.col("grk") <= NEARDUP_BLOCKER_CAP)
+    return near_rejected(ranked, blockers, sbl, batch_rows, arrival)
 
 
 def ingest_batch(batch_df: DataFrame, batch_id: int, out_root: str) -> None:
     """All three admission stages for one micro-batch; batch-owned
     partition writes throughout (see module docstring)."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import simhash_fp
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.selection import (
-        dsir_features,
-        dsir_score_against_model,
-    )
-
     spark = batch_df.sparkSession
-    exact_dir = os.path.join(out_root, "exact_store")
-    neardup_dir = os.path.join(out_root, "neardup_store")
-    results_dir = os.path.join(out_root, "ingest_results")
-    stats_dir = os.path.join(out_root, "ingest_stats")
-    model_dir = os.path.join(out_root, "dsir_model")
-
-    # first-SEEN-wins: a batch carrying an explicit arrival_seq (the
-    # arrival-order chunk layout) orders every within-batch precedence
-    # window/compare by (arrival_seq, doc_id), and every store row
-    # blocks unconditionally (it arrived in a strictly earlier batch) —
-    # semantics spec operators/ingest.py::arrival_order_ingest_pipeline.
-    # Without the column the id-ordered-replay rules below are unchanged.
-    arrival = "arrival_seq" in batch_df.columns
-    base_cols = ["doc_id", "lang", "text"] + (
-        ["arrival_seq"] if arrival else []
+    exact_dir, neardup_dir, results_dir, stats_dir, model_dir = (
+        os.path.join(out_root, d) for d in (
+            "exact_store", "neardup_store", "ingest_results", "ingest_stats",
+            "dsir_model",
+        )
     )
-    order_cols = ["arrival_seq", "doc_id"] if arrival else ["doc_id"]
-    base = batch_df.select(*base_cols).persist()
+    # first-SEEN-wins for a batch carrying arrival_seq (dedup.arrival_cols);
+    # semantics spec operators/ingest.py::arrival_order_ingest_pipeline
+    arrival = arrival_cols(batch_df)
+    cached: list[DataFrame] = []
+
+    def cache(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return df
+
+    base = cache(batch_df.select("doc_id", "lang", "text", *arrival))
     try:
         n_batch = base.count()
-        assert_store_not_mid_compaction(spark, exact_dir)
-        assert_store_not_mid_compaction(spark, neardup_dir)
 
         # ---- stage 1: exact (within-batch keep-first + store anti-join)
-        fps = base.select(
-            "doc_id", F.md5("text").alias("fingerprint"),
-            *(["arrival_seq"] if arrival else []),
-        )
-        w = Window.partitionBy("fingerprint").orderBy(*order_cols)
+        fps = base.select("doc_id", F.md5("text").alias("fingerprint"), *arrival)
+        w = Window.partitionBy("fingerprint").orderBy(*arrival, "doc_id")
         firsts = (
             fps.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        if _store_path_exists(spark, exact_dir):
-            store1 = (
-                spark.read.schema(INGEST_EXACT_STORE_SCHEMA)
-                .parquet(exact_dir)
-                .filter(F.col("batch_id") < batch_id)
-            )
-            s1_ids = novel_against_store(firsts, store1, batch_rows=n_batch)
-        else:
-            s1_ids = firsts
+        store1 = prior_partitions(spark, exact_dir, INGEST_EXACT_STORE_SCHEMA, batch_id)
         # persist the survivor id+fingerprint set: it feeds the flag
         # assembly, the exact-store write, and (via s1) the stage-2/3
         # inputs — without the cache each action would re-run the store
         # anti-join (one extra store scan per sink)
-        s1_ids = s1_ids.persist()
-        s1 = base.join(s1_ids.select("doc_id"), "doc_id").persist()
+        s1_ids = cache(
+            firsts if store1 is None
+            else novel_against_store(firsts, store1, batch_rows=n_batch)
+        )
+        s1 = cache(base.join(s1_ids.select("doc_id"), "doc_id"))
 
         # ---- stage 2: near-dup among stage-1 survivors, decided against
         # the CAPPED per-bucket blocker set (module docstring). The
-        # batch's chunk rows are ranked ONCE per bucket by doc_id, offset
-        # by the store's existing blocker count (a bounded aggregate over
-        # the blk-filtered scan — the (ci, cv) keyspace is at most
-        # SIMHASH_CHUNKS x 2^16, so the counts frame always broadcasts),
-        # giving each row its global arrival rank; rank <= cap marks it a
-        # blocker for this batch and, via the persisted blk flags, every
-        # later one. rej2 and the ranked frame each feed several plan
-        # subtrees, so both persist for the batch (one store scan + one
-        # self-join per batch, not one per sink).
-        from reddit_sentiment_spark_streaming_pipeline_spark.operators.ingest import (
-            NEARDUP_BLOCKER_CAP,
-        )
-
+        # batch's chunk rows are ranked ONCE per bucket, offset by the
+        # store's existing blocker count, giving each row its global
+        # arrival rank; rank <= cap marks it a blocker for this batch
+        # and, via the persisted blk flags, every later one. rej2 and the
+        # ranked frame each feed several plan subtrees, so both persist
+        # for the batch (one store scan + one self-join per batch, not
+        # one per sink).
         fp2 = simhash_fp(s1.select("doc_id", "text"))
         if arrival:
             fp2 = fp2.join(s1.select("doc_id", "arrival_seq"), "doc_id")
-        fp2 = fp2.persist()
-        sbl = ranked = rej2 = None
-        try:
-            n_s1 = fp2.count()
-            if _store_path_exists(spark, neardup_dir):
-                store2 = (
-                    spark.read.schema(INGEST_NEARDUP_STORE_SCHEMA)
-                    .parquet(neardup_dir)
-                    .filter(F.col("batch_id") < batch_id)
-                )
-                sbl = _store_blocker_rows(store2).persist()
-            ranked = stage2_ranked(fp2, sbl, arrival=arrival).persist()
-            rej2 = (
-                stage2_rejected(ranked, sbl, n_s1, arrival=arrival)
-                .distinct()
-                .withColumn("r2", F.lit(1))
-                .persist()
-            )
+        fp2 = cache(fp2)
+        n_s1 = fp2.count()
+        store2 = prior_partitions(spark, neardup_dir, INGEST_NEARDUP_STORE_SCHEMA, batch_id)
+        sbl = None if store2 is None else cache(_store_blocker_rows(store2))
+        ranked = cache(stage2_ranked(fp2, sbl, arrival=bool(arrival)))
+        rej2 = cache(
+            stage2_rejected(ranked, sbl, n_s1, arrival=bool(arrival))
+            .distinct()
+            .withColumn("r2", F.lit(1))
+        )
 
-            # per-doc blk flags for the store write: fold the chunk ranks
-            # back to one row per doc
-            blk = ranked.groupBy(F.col("d.doc_id").alias("doc_id")).agg(*[
-                F.max(
-                    F.when(F.col("ci") == c, F.col("grk") <= NEARDUP_BLOCKER_CAP)
-                ).alias(f"blk{c}")
-                for c in range(SIMHASH_CHUNKS)
-            ])
+        # per-doc blk flags for the store write: fold the chunk ranks
+        # back to one row per doc
+        blk = ranked.groupBy(F.col("d.doc_id").alias("doc_id")).agg(*[
+            F.max(
+                F.when(F.col("ci") == c, F.col("grk") <= NEARDUP_BLOCKER_CAP)
+            ).alias(f"blk{c}")
+            for c in range(SIMHASH_CHUNKS)
+        ])
 
-            # ---- stage 3: frozen-model scoring of stage-2 survivors
-            lr, params = read_selection_model(spark, model_dir)
-            s2 = s1.join(rej2.select("doc_id"), "doc_id", "left_anti")
-            scored = dsir_score_against_model(
-                dsir_features(s2), lr, params
-            ).select("doc_id", "admitted")
+        # ---- stage 3: frozen-model scoring of stage-2 survivors
+        lr, params = read_selection_model(spark, model_dir)
+        s2 = s1.join(rej2.select("doc_id"), "doc_id", "left_anti")
+        scored = dsir_score_against_model(
+            dsir_features(s2), lr, params
+        ).select("doc_id", "admitted")
 
-            # ---- flag assembly + batch-owned writes
-            out = (
-                base.select("doc_id", "lang")
-                .join(s1_ids.select("doc_id", F.lit(1).alias("e")), "doc_id", "left")
-                .join(rej2, "doc_id", "left")
-                .join(scored, "doc_id", "left")
-            )
-            neardup_ok = F.col("e").isNotNull() & F.col("r2").isNull()
-            out = out.select(
-                "doc_id",
-                "lang",
-                F.col("e").isNotNull().alias("exact_ok"),
-                neardup_ok.alias("neardup_ok"),
-                F.coalesce(neardup_ok & F.col("admitted"), F.lit(False)).alias("kept"),
-            )
-            # the three funnel counts ride the results write as observed
-            # metrics (one action instead of three counts + a write; out
-            # now has a single consumer, so its persist is gone too —
-            # r13, guide §1.2: fewer passes per micro-batch)
-            obs = Observation()
-            out.observe(
-                obs,
-                *[
-                    F.coalesce(F.sum(F.col(c).cast("long")), F.lit(0)).alias(c)
-                    for c in ("exact_ok", "neardup_ok", "kept")
-                ],
-            ).write.mode("overwrite").parquet(
-                os.path.join(results_dir, f"batch_id={batch_id}")
-            )
-            m = obs.get
-            n_exact, n_neardup, n_kept = (
-                int(m["exact_ok"]), int(m["neardup_ok"]), int(m["kept"])
-            )
-            s1_ids.select("fingerprint", "doc_id").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(exact_dir, f"batch_id={batch_id}"))
+        # ---- flag assembly + batch-owned writes; the three funnel
+        # counts ride the results write
+        out = (
+            base.select("doc_id", "lang")
+            .join(s1_ids.select("doc_id", F.lit(1).alias("e")), "doc_id", "left")
+            .join(rej2, "doc_id", "left")
+            .join(scored, "doc_id", "left")
+        )
+        neardup_ok = F.col("e").isNotNull() & F.col("r2").isNull()
+        out = out.select(
+            "doc_id",
+            "lang",
+            F.col("e").isNotNull().alias("exact_ok"),
+            neardup_ok.alias("neardup_ok"),
+            F.coalesce(neardup_ok & F.col("admitted"), F.lit(False)).alias("kept"),
+        )
+        m = write_partition(out, results_dir, batch_id, **{
+            c: count_true(c) for c in ("exact_ok", "neardup_ok", "kept")
+        })
+        write_partition(s1_ids, exact_dir, batch_id, "fingerprint", "doc_id")
+        write_partition(
             fp2.join(rej2, "doc_id", "left").join(blk, "doc_id").select(
                 "doc_id", "h0", "h1", "h2", "h3",
                 *[f"blk{c}" for c in range(SIMHASH_CHUNKS)],
                 F.col("r2").isNull().alias("admitted"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(neardup_dir, f"batch_id={batch_id}")
-            )
-        finally:
-            for df in (rej2, ranked, sbl, fp2):
-                if df is not None:
-                    df.unpersist()
-            s1.unpersist()
-            s1_ids.unpersist()
+            ),
+            neardup_dir, batch_id,
+        )
     finally:
-        base.unpersist()
+        for df in reversed(cached):
+            df.unpersist()
     write_stats_row(
         spark, stats_dir, batch_id,
         "n_batch long, n_exact_ok long, n_neardup_ok long, n_kept long",
-        (n_batch, n_exact, n_neardup, n_kept),
+        (n_batch, m["exact_ok"], m["neardup_ok"], m["kept"]),
     )
 
 
@@ -445,28 +342,10 @@ def read_ingest_stats(spark: SparkSession, out_root: str) -> DataFrame:
 def start_ingest_pipeline(docs_stream: DataFrame, out_root: str,
                           cal_docs: DataFrame | None = None,
                           after_batch_hook=None) -> StreamingQuery:
-    """foreachBatch ingest pipeline with a durable checkpoint under its
-    own output root. Model freeze-once semantics are the selection
-    gate's (params dir written last keys the check; a resume reuses the
-    durable model; a fresh root without cal_docs refuses loudly)."""
-    spark = docs_stream.sparkSession
-    model_dir = os.path.join(out_root, "dsir_model")
-    if not _store_path_exists(spark, os.path.join(model_dir, "params")):
-        if cal_docs is None:
-            raise ValueError(
-                "start_ingest_pipeline: no frozen model under "
-                f"{model_dir} and no cal_docs to freeze one from"
-            )
-        freeze_selection_model(cal_docs, model_dir)
-
-    def _fn(df: DataFrame, bid: int) -> None:
-        ingest_batch(df, bid, out_root)
-        if after_batch_hook is not None:
-            after_batch_hook(bid)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))
-        .queryName("ingest_pipeline")
-        .start()
+    """foreachBatch ingest pipeline under its own output root, with the
+    selection gate's freeze-once model semantics (stats.start_gate)."""
+    return start_gate(
+        docs_stream, out_root, "ingest_pipeline",
+        lambda df, bid: ingest_batch(df, bid, out_root),
+        after_batch_hook, freeze=freeze_selection_model, cal_docs=cal_docs,
     )

@@ -34,25 +34,41 @@ def _order_files_by_name(out_dir: str, suffix: str) -> int:
     return len(files)
 
 
-def write_replay_chunks(spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 5) -> int:
-    """Split `events` into n ts-range parquet chunks (one micro-batch each
-    when replayed with maxFilesPerTrigger=1). Returns the row count.
+def write_chunks(frame: DataFrame, out_dir: str, n_chunks: int, key: str) -> int:
+    """Range-partition `frame` on `key` into n parquet chunk files, each
+    sorted on `key`, with mtimes stamped in key order (one micro-batch
+    each when replayed with maxFilesPerTrigger=1). Returns the row count.
 
-    Fully distributed: repartitionByRange samples ts boundaries and writes
-    every chunk from the executors — nothing is collected to the driver, so
-    the same call works when `events` is a 100 TB table (the old
+    Fully distributed: repartitionByRange samples the key boundaries and
+    every chunk is written from the executors — nothing is collected to
+    the driver, so the same call works on a 100 TB table (the old
     toPandas() fixture writer OOMed the driver past test scale).
     """
-    ev = load_table(spark, sf_dir, "events")
-    n = ev.count()
+    n = frame.count()
     (
-        ev.repartitionByRange(n_chunks, "ts")
-        .sortWithinPartitions("ts")
+        frame.repartitionByRange(n_chunks, key)
+        .sortWithinPartitions(key)
         .write.mode("overwrite")
         .parquet(out_dir)
     )
     _order_files_by_name(out_dir, ".parquet")
     return n
+
+
+def read_chunk_stream(spark: SparkSession, chunk_dir: str, schema,
+                      max_files_per_trigger: int = 1) -> DataFrame:
+    """Streaming frame over parquet chunk files, read with an explicit
+    `schema` (DDL string or StructType)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(chunk_dir)
+    )
+
+
+def write_replay_chunks(spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 5) -> int:
+    """Split `events` into n ts-range parquet chunks. Returns the row count."""
+    return write_chunks(load_table(spark, sf_dir, "events"), out_dir, n_chunks, "ts")
 
 
 def write_wire_chunks(wire_df, out_dir: str, n_chunks: int = 4) -> int:
@@ -134,11 +150,7 @@ def read_replay_stream(spark: SparkSession, replay_dir: str,
     TIMESTAMP_NTZ — watermarks require TIMESTAMP, so cast those back.
     """
     schema = spark.read.parquet(replay_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(replay_dir)
-    )
+    stream = read_chunk_stream(spark, replay_dir, schema, max_files_per_trigger)
     for f in schema.fields:
         if f.dataType.typeName() == "timestamp_ntz":
             stream = stream.withColumn(f.name, stream[f.name].cast("timestamp"))

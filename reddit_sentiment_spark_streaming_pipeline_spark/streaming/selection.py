@@ -18,13 +18,12 @@ chunking of the corpus (tests/test_streaming.py::
 test_selection_gate_matches_batch_twin) — no id-ordering requirement,
 unlike the dedup gates' smaller-id rule.
 
-Replay contract (shared with gate_batch, streaming/dedup.py): every
+Replay contract: the batch-owned layout of streaming/stats.py — every
 batch overwrites its OWN `batch_id=N` results partition with ALL its
-scored rows (admitted flagged) and its own stats row, so a foreachBatch
-replay after a crash-before-commit recomputes the identical decision
-set against the immutable frozen model and repairs any partial write.
-There is NO store read at all — admission depends only on the model —
-so per-batch cost never grows with stream lifetime.
+scored rows (admitted flagged) and its own stats row. There is NO store
+read at all — admission depends only on the immutable model — so a
+replay recomputes the identical decision set and per-batch cost never
+grows with stream lifetime.
 
 Scale shape (100 TB): the model is DSIR_BUCKETS + 1 rows (~8k) whatever
 the corpus size — always broadcastable; per-batch scoring is the
@@ -38,13 +37,25 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from reddit_sentiment_spark_streaming_pipeline_spark.streaming.dedup import _store_path_exists
-from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import _order_files_by_name
-from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import write_stats_row
+from reddit_sentiment_spark_streaming_pipeline_spark.operators.selection import (
+    dsir_features,
+    dsir_frozen_model,
+    dsir_score_against_model,
+)
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import (
+    read_chunk_stream,
+    write_chunks,
+)
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import (
+    count_true,
+    start_gate,
+    write_partition,
+    write_stats_row,
+)
 
 # chunk layout for the selection stream: the raw documents table's
 # scoring columns (no snapshot fixture — selection has no duplicate
@@ -70,24 +81,12 @@ def write_selection_chunks(spark: SparkSession, sf_dir: str, out_dir: str,
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", "text", "lang", "source"
     )
-    n = docs.count()
-    (
-        docs.repartitionByRange(n_chunks, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _order_files_by_name(out_dir, ".parquet")
-    return n
+    return write_chunks(docs, out_dir, n_chunks, "doc_id")
 
 
 def read_selection_stream(spark: SparkSession, chunk_dir: str,
                           max_files_per_trigger: int = 1) -> DataFrame:
-    return (
-        spark.readStream.schema(SEL_CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(chunk_dir)
-    )
+    return read_chunk_stream(spark, chunk_dir, SEL_CHUNK_SCHEMA, max_files_per_trigger)
 
 
 def freeze_selection_model(cal_docs: DataFrame, model_dir: str) -> None:
@@ -96,11 +95,6 @@ def freeze_selection_model(cal_docs: DataFrame, model_dir: str) -> None:
     stream opens; the gate only ever READS it. The empty-target-slice
     assert_true inside dsir_frozen_model fires here — a misconfigured
     target tag fails the freeze loudly, before any batch is admitted."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.selection import (
-        dsir_features,
-        dsir_frozen_model,
-    )
-
     lr, params = dsir_frozen_model(dsir_features(cal_docs))
     # one scored-calibration pass feeds both writes; n_cal rides the
     # params row so operators can audit the freeze's sample size
@@ -130,52 +124,30 @@ def selection_gate_batch(batch_df: DataFrame, batch_id: int, model_dir: str,
                          results_dir: str, stats_dir: str) -> None:
     """Score one micro-batch against the frozen model; write the batch's
     scored rows (admitted flagged) into its OWN batch_id=N partition and
-    one per-partition stats row — the gate_batch replay contract with no
-    store read (admission depends only on the immutable model)."""
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.selection import (
-        dsir_features,
-        dsir_score_against_model,
-    )
-
+    one per-partition stats row (streaming/stats.py's contract, with no
+    store read)."""
     spark = batch_df.sparkSession
     lr, params = read_selection_model(spark, model_dir)
     # single-source-scan contract (the lesson the chaos-neardup rehearsal
     # taught gate_batch/neardup_gate_batch): the raw n_batch count and
     # the scored build would otherwise each scan the streaming source —
     # 2× ingest I/O and an inflated numInputRows. Persist the scoring
-    # projection, materialize it with the n_batch count, and release it
-    # as soon as the scored rows (fingerprint-narrow) are themselves
-    # cached — a backfill-sized batch must not keep text blocks resident
-    # through the counts and the partition write. Token-less docs are
-    # absent from the scored output (the twin's convention), so stats
-    # record the raw delivery (n_batch) and the scored count separately.
+    # projection and materialize it with the n_batch count. Token-less
+    # docs are absent from the scored output (the twin's convention), so
+    # stats record the raw delivery (n_batch) and the scored count
+    # separately; both of the latter ride the results write.
     base = batch_df.select("doc_id", "lang", "text").persist()
     scored = dsir_score_against_model(dsir_features(base), lr, params)
     try:
         n_batch = base.count()
-        # scored-row and admitted counts ride the results write as
-        # observed metrics (one action instead of two counts + write;
-        # scored now has a single consumer, so its persist is gone too —
-        # r13, guide §1.2: fewer passes per micro-batch)
-        obs = Observation()
-        scored.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_scored"),
-            F.coalesce(F.sum(F.col("admitted").cast("long")), F.lit(0)).alias(
-                "n_admitted"
-            ),
-        ).write.mode("overwrite").parquet(
-            os.path.join(results_dir, f"batch_id={batch_id}")
-        )
-        m = obs.get
-        n_scored, n_admitted = int(m["n_scored"]), int(m["n_admitted"])
+        m = write_partition(scored, results_dir, batch_id,
+                            n_scored=F.count(F.lit(1)),
+                            n_admitted=count_true("admitted"))
     finally:
         base.unpersist()
-    write_stats_row(
-        spark, stats_dir, batch_id,
-        "n_batch long, n_scored long, n_admitted long",
-        (n_batch, n_scored, n_admitted),
-    )
+    write_stats_row(spark, stats_dir, batch_id,
+                    "n_batch long, n_scored long, n_admitted long",
+                    (n_batch, m["n_scored"], m["n_admitted"]))
 
 
 def read_selection_results(spark: SparkSession, out_root: str) -> DataFrame:
@@ -191,34 +163,16 @@ def read_selection_stats(spark: SparkSession, out_root: str) -> DataFrame:
 def start_selection_gate(docs_stream: DataFrame, out_root: str,
                          cal_docs: DataFrame | None = None,
                          after_batch_hook=None) -> StreamingQuery:
-    """foreachBatch DSIR selection gate with a durable checkpoint under
-    its own output root. The model freezes ONCE: if `<out_root>/
-    dsir_model` already exists (a resume after a kill), the existing
-    frozen model is reused untouched — re-freezing on resume could shift
-    the threshold mid-stream and split the corpus across two contracts;
-    `cal_docs` is required only for the first start. Same
+    """foreachBatch DSIR selection gate under its own output root. The
+    model freezes ONCE into `<out_root>/dsir_model` (stats.start_gate:
+    a resume after a kill reuses the frozen model untouched, so
+    `cal_docs` is required only for the first start). Same
     after_batch_hook contract as start_dedup_gate (chaos injection)."""
-    spark = docs_stream.sparkSession
     model_dir = os.path.join(out_root, "dsir_model")
     results_dir = os.path.join(out_root, "selection_results")
     stats_dir = os.path.join(out_root, "selection_stats")
-
-    if not _store_path_exists(spark, os.path.join(model_dir, "params")):
-        if cal_docs is None:
-            raise ValueError(
-                "start_selection_gate: no frozen model under "
-                f"{model_dir} and no cal_docs to freeze one from"
-            )
-        freeze_selection_model(cal_docs, model_dir)
-
-    def _fn(df: DataFrame, bid: int) -> None:
-        selection_gate_batch(df, bid, model_dir, results_dir, stats_dir)
-        if after_batch_hook is not None:
-            after_batch_hook(bid)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))
-        .queryName("selection_gate")
-        .start()
+    return start_gate(
+        docs_stream, out_root, "selection_gate",
+        lambda df, bid: selection_gate_batch(df, bid, model_dir, results_dir, stats_dir),
+        after_batch_hook, freeze=freeze_selection_model, cal_docs=cal_docs,
     )

@@ -1646,3 +1646,117 @@ def test_write_stats_row_roundtrip_and_overwrite(spark, tmp_path):
         if not os.path.basename(f).startswith((".", "_"))
     ]
     assert len(vis) == 1
+
+
+def test_write_stats_row_file_scheme_uri(spark, tmp_path, monkeypatch):
+    """A Hadoop-style single-slash `file:/x` stats root is local: the row
+    must land in /x, where spark.read.parquet looks, and not in a
+    relative `./file:/x` tree under the working directory."""
+    from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import (
+        write_stats_row,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    stats_dir = "file:" + str(tmp_path / "stats")
+    schema = "n_batch long, n_admitted long"
+    write_stats_row(spark, stats_dir, 0, schema, (4, 3))
+    write_stats_row(spark, stats_dir, 1, schema, (2, 2))
+    got = {
+        (r.batch_id, r.n_batch, r.n_admitted)
+        for r in spark.read.parquet(stats_dir).collect()
+    }
+    assert got == {(0, 4, 3), (1, 2, 2)}
+    assert not (tmp_path / "file:").exists()
+
+
+def test_write_stats_row_rewrite_crash_keeps_committed_row(spark, tmp_path, monkeypatch):
+    """A replay's rewrite that dies before its atomic commit must leave
+    the previously committed row readable: the new row is committed by
+    os.replace onto the fixed name BEFORE any other visible file is
+    removed, so no crash point leaves the partition without a row."""
+    from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import (
+        write_stats_row,
+    )
+
+    stats_dir = str(tmp_path / "stats")
+    schema = "n_batch long, n_admitted long"
+    write_stats_row(spark, stats_dir, 0, schema, (10, 7))
+
+    def crash(*_args, **_kwargs):
+        raise OSError("crash before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError, match="crash before commit"):
+            write_stats_row(spark, stats_dir, 0, schema, (10, 6))
+    got = [(r.batch_id, r.n_batch, r.n_admitted)
+           for r in spark.read.parquet(stats_dir).collect()]
+    assert got == [(0, 10, 7)]
+
+    write_stats_row(spark, stats_dir, 0, schema, (10, 6))  # the replay heals
+    got = [(r.batch_id, r.n_batch, r.n_admitted)
+           for r in spark.read.parquet(stats_dir).collect()]
+    assert got == [(0, 10, 6)]
+
+
+@pytest.mark.parametrize("gate", ["exact", "neardup"])
+def test_dedup_gate_crash_replay_is_idempotent(spark, sf_dir, tmp_path, gate):
+    """Crash after batch 1's side effects (store partition + stats row)
+    but before the checkpoint commit: the replay reads only `batch_id <
+    1`, so its own leaked partition is invisible, recomputes the
+    identical admission set, and the overwrite repairs everything. The
+    store multiset and the per-batch stats equal an uninterrupted
+    control's exactly — for the exact gate and the near-dup gate."""
+    from collections import Counter
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from reddit_sentiment_spark_streaming_pipeline_spark.streaming.dedup import (
+        read_doc_stream,
+        start_dedup_gate,
+        start_neardup_gate,
+        write_doc_chunks,
+    )
+
+    start, store, stats = {
+        "exact": (start_dedup_gate, "fingerprint_store", "gate_stats"),
+        "neardup": (start_neardup_gate, "neardup_store", "neardup_stats"),
+    }[gate]
+    chunk_dir = str(tmp_path / "chunks")
+    write_doc_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
+
+    def drain(root, hook=None):
+        q = start(read_doc_stream(spark, chunk_dir), root, after_batch_hook=hook)
+        try:
+            q.processAllAvailable()
+        except StreamingQueryException:
+            assert hook is not None  # only the injected crash may raise
+        finally:
+            q.stop()
+
+    ctrl = str(tmp_path / "ctrl")
+    drain(ctrl)
+
+    crashed = []
+
+    def hook(bid):
+        if bid == 1 and not crashed:
+            crashed.append(bid)
+            raise RuntimeError("chaos: crash after side effects, before commit")
+
+    chaos = str(tmp_path / "chaos")
+    drain(chaos, hook=hook)
+    assert crashed == [1]
+    drain(chaos)  # resume from the checkpoint
+
+    def rows(root):
+        df = spark.read.parquet(f"{root}/{store}")
+        return Counter(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+    assert rows(chaos) == rows(ctrl)
+
+    cs = spark.read.parquet(f"{ctrl}/{stats}").toPandas().sort_values("batch_id")
+    xs = spark.read.parquet(f"{chaos}/{stats}").toPandas().sort_values("batch_id")
+    for col in ("batch_id", "n_batch", "n_admitted", "n_rejected"):
+        assert list(cs[col]) == list(xs[col])
+    assert xs.n_rejected.sum() > 0  # the stores really rejected something

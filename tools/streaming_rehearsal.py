@@ -96,6 +96,7 @@ from reddit_sentiment_spark_streaming_pipeline_spark.streaming.pipeline import (
 )
 from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import (  # noqa: E402
     read_replay_stream,
+    write_chunks,
     write_replay_chunks,
 )
 
@@ -114,19 +115,7 @@ def build_big_events(spark, sf_dir: str, out_dir: str, n_chunks: int) -> int:
         (F.col("ts") + F.expr("make_dt_interval(k * 31, 0, 0, 0)")).alias("ts"),
         "user_id", "event_type", "value", "props",
     )
-    n = big.count()
-    (
-        big.repartitionByRange(n_chunks, "ts")
-        .sortWithinPartitions("ts")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    from reddit_sentiment_spark_streaming_pipeline_spark.streaming.replay import (
-        _order_files_by_name,
-    )
-
-    _order_files_by_name(out_dir, ".parquet")
-    return n
+    return write_chunks(big, out_dir, n_chunks, "ts")
 
 
 def make_progress_listener(query_name: str, sink: list):
@@ -396,18 +385,17 @@ def main() -> None:
     if scenario == "neardup-forced-fallback":
         # drive the NEAR-dup gate's batch-broadcast fallback at VOLUME:
         # every micro-batch forced through the shuffle-hash regime
-        # (SPARK_GRAFT_GATE_BATCH_BROADCAST_MAX=0) over the spam flood
+        # (dedup.GATE_BATCH_BROADCAST_MAX = 0) over the spam flood
         # fixture, at 1x and REPLICASx, plus a default-regime REPLICASx
         # drain — the forced store must be row-identical to the default
         # store (the fallback changes join physics, never decisions),
         # and the forced drain's wall must scale ~linearly
+        from reddit_sentiment_spark_streaming_pipeline_spark.streaming import dedup as sd
         from reddit_sentiment_spark_streaming_pipeline_spark.streaming.dedup import (
             read_neardup_store,
             write_doc_chunks,
         )
         import tools.scale_rehearsal as _sr
-
-        GATE_ENV = "SPARK_GRAFT_GATE_BATCH_BROADCAST_MAX"
 
         def build_spam(replicas: int, dest: str) -> None:
             _sr.REPLICAS = replicas
@@ -418,26 +406,36 @@ def main() -> None:
             finally:
                 _sr.TEXT_PERTURB = prev
 
-        def drain(docs_dir: str, n_chunks: int, root: str, forced: bool):
-            chunk_dir = os.path.join(work, f"ffchunks_{os.path.basename(root)}")
-            n = write_doc_chunks(spark, docs_dir, chunk_dir, n_chunks=n_chunks)
+        def write_chunks_of(docs_dir: str, n_chunks: int) -> tuple[str, int]:
+            # one chunk write per fixture: both regimes drain the SAME
+            # files, because two range-partitioned writes of one input
+            # may split it at different rows, which would move batch
+            # ownership and confound the store comparison
+            chunk_dir = os.path.join(work, f"ffchunks_{os.path.basename(docs_dir)}")
+            return chunk_dir, write_doc_chunks(spark, docs_dir, chunk_dir, n_chunks=n_chunks)
+
+        def drain(chunk_dir: str, n: int, root: str, forced: bool) -> float:
+            default = sd.GATE_BATCH_BROADCAST_MAX
             if forced:
-                os.environ[GATE_ENV] = "0"
+                sd.GATE_BATCH_BROADCAST_MAX = 0
             try:
                 sec, _prog = run_neardup_gate(
                     spark, chunk_dir, os.path.join(work, root), n
                 )
             finally:
-                os.environ.pop(GATE_ENV, None)
-            return n, round(sec, 3)
+                sd.GATE_BATCH_BROADCAST_MAX = default
+            return round(sec, 3)
 
         small_docs = os.path.join(work, "ff_docs_1x")
         big_docs = os.path.join(work, "ff_docs_big")
         build_spam(1, small_docs)
         build_spam(REPLICAS, big_docs)
-        n1, t_forced_1x = drain(small_docs, chunks, "ff_forced_1x", True)
-        nb, t_forced_big = drain(big_docs, chunks * REPLICAS, "ff_forced_big", True)
-        _, t_default_big = drain(big_docs, chunks * REPLICAS, "ff_default_big", False)
+        small = write_chunks_of(small_docs, chunks)
+        big = write_chunks_of(big_docs, chunks * REPLICAS)
+        n1, nb = small[1], big[1]
+        t_forced_1x = drain(*small, "ff_forced_1x", True)
+        t_forced_big = drain(*big, "ff_forced_big", True)
+        t_default_big = drain(*big, "ff_default_big", False)
 
         cols = ["doc_id", "source", "h0", "h1", "h2", "h3", "admitted", "batch_id"]
         fs = read_neardup_store(spark, os.path.join(work, "ff_forced_big")).select(cols)
@@ -447,7 +445,7 @@ def main() -> None:
             "rehearsal": f"neardup_gate_forced_fallback_{REPLICAS}x_spam_flood",
             "replicas": REPLICAS,
             "env_knobs": _sr._env_knobs(),
-            "forced_gates": {GATE_ENV: "0"},
+            "forced_gates": {"GATE_BATCH_BROADCAST_MAX": 0},
             # metric map nested under "gate" like the other gate
             # artifacts — the COVERAGE claim-drift guard reads ratio
             # keys (*_x) from that nest
@@ -1473,7 +1471,6 @@ def chaos_compaction(spark, docs_dir: str, work: str, n_chunks: int,
     from reddit_sentiment_spark_streaming_pipeline_spark.streaming.dedup import (
         NEARDUP_STORE_SCHEMA,
         STORE_SCHEMA,
-        assert_store_not_mid_compaction,
         compact_store,
         read_doc_stream,
         read_gate_stats,
@@ -1481,6 +1478,9 @@ def chaos_compaction(spark, docs_dir: str, work: str, n_chunks: int,
         start_dedup_gate,
         start_neardup_gate,
         write_doc_chunks,
+    )
+    from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import (
+        assert_store_not_mid_compaction,
     )
 
     if flavor == "neardup":
