@@ -18,21 +18,46 @@ Result tables (exact reference shapes):
 Plus raw wire append (K1) and the processed posts table (K2 made an append
 to one directory instead of one overwrite-file per batch).
 
-Scale: every write is either the raw pass-through or a per-batch aggregate
-of bounded cardinality; nothing collects to the driver except three scalar
-rows. unique_authors keeps approx_count_distinct (HLL++) exactly like the
-reference (reddit_consumer.py:379) — exact distinct would shuffle author
-strings per subreddit for no consumer benefit.
+Per micro-batch (`process_posts_batch`) five Spark jobs run: `isEmpty`,
+the raw append, the processed append, and ONE aggregate over the
+persisted posts — `rollup("subreddit")`, a grand-total row plus one row
+per subreddit — collected to the driver (two jobs: AQE stays on for
+frames built inside foreachBatch, so the shuffle map stage is its own
+job). Its cardinality is bounded by the number of subreddits, not by the
+batch. The driver writes the three aggregate tables with pyarrow
+(`streaming/stats.py` `write_driver_rows`), each batch's rows as
+`batch-{N:010d}.parquet` in the sink's flat directory: on batches this
+small, job scheduling rather than row work sets the trigger time, and a
+Spark write would cost a job per table. Timestamps are built from the
+collected epoch micros, so no time zone can shift them. unique_authors
+keeps approx_count_distinct (HLL++) exactly like the reference
+(reddit_consumer.py:379) — exact distinct would shuffle author strings
+per subreddit for no consumer benefit.
+
+Replay: a crash after the sink writes but before the checkpoint commit
+re-runs the batch. The three aggregate files have fixed per-batch names,
+so the replay overwrites them and those sinks stay exact. Raw and
+processed are still Spark appends: a replay duplicates the batch's rows
+there (ROADMAP item 5's open half).
 """
 
 from __future__ import annotations
 
 import datetime
 import os
+import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from reddit_sentiment_spark_streaming_pipeline_spark.functions.sentiment import with_sentiment
 from reddit_sentiment_spark_streaming_pipeline_spark.operators.posts import parse_posts
@@ -42,8 +67,27 @@ from reddit_sentiment_spark_streaming_pipeline_spark.operators.refs import (
     USER_REF_PATTERN,
 )
 from reddit_sentiment_spark_streaming_pipeline_spark.streaming.retention import enforce_retention
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import write_driver_rows
 
 EPOCH_FALLBACK = datetime.datetime(1970, 1, 1)
+
+# per-post reference count column, its pattern, its references-sink total
+_REF_COUNTS = (("u", USER_REF_PATTERN, "total_user_refs"),
+               ("s", SUB_REF_PATTERN, "total_sub_refs"),
+               ("l", URL_PATTERN, "total_urls"))
+
+# the three aggregate sinks' schemas, nullability included, as a Spark
+# DataFrame write of the same aggregates types them
+_STAMP = StructField("timestamp", TimestampType(), False)
+SENTIMENT_SCHEMA = StructType([_STAMP, StructField("average_sentiment", DoubleType())])
+STATS_SCHEMA = StructType([
+    StructField("subreddit", StringType()),
+    StructField("post_count", LongType(), False),
+    StructField("unique_authors", LongType(), False),
+    StructField("avg_length", DoubleType()),
+    _STAMP,
+])
+REFS_SCHEMA = StructType([_STAMP] + [StructField(t, DoubleType()) for *_, t in _REF_COUNTS])
 
 
 class PostsSinks:
@@ -69,39 +113,79 @@ def enrich_posts(wire: DataFrame) -> DataFrame:
     return with_sentiment(parse_posts(wire))
 
 
-def subreddit_stats_frame(posts: DataFrame) -> DataFrame:
-    """A4/A5/O2 (reddit_consumer.py:375-384), HLL++ distinct kept."""
-    return (
-        posts.groupBy("subreddit")
-        .agg(
-            F.count(F.lit(1)).alias("post_count"),
-            F.approx_count_distinct("author").alias("unique_authors"),
-            F.round(F.avg("text_length"), 6).alias("avg_length"),
-        )
-        .filter(F.col("post_count") > 0)
-        .orderBy(F.desc("post_count"), "subreddit")
-    )
+def _ref_counts() -> list[Column]:
+    """F3-F6: per-post /u/, /r/ and URL reference counts."""
+    return [F.size(F.regexp_extract_all("text", F.lit(pat), F.lit(0))).alias(c)
+            for c, pat, _ in _REF_COUNTS]
+
+
+def _ref_sums() -> list[Column]:
+    """A8: the reference counts summed, as the references sink types them."""
+    return [F.sum(c).cast("double").alias(total) for c, _, total in _REF_COUNTS]
 
 
 def references_totals_frame(posts: DataFrame) -> DataFrame:
     """F3-F6 + A8 grand totals (reddit_consumer.py:398-420) in one pass."""
+    return posts.select(*_ref_counts()).agg(*_ref_sums())
+
+
+def batch_rollup(posts: DataFrame) -> DataFrame:
+    """Every per-batch aggregate in one pass: the grand-total row
+    (`g` = 1: A1 batch time, A3 sentiment, A8 reference totals) plus one
+    row per subreddit (`g` = 0: A4/A5, reddit_consumer.py:375-384)."""
     return (
-        posts.select(
-            F.size(F.regexp_extract_all("text", F.lit(USER_REF_PATTERN), F.lit(0))).alias("u"),
-            F.size(F.regexp_extract_all("text", F.lit(SUB_REF_PATTERN), F.lit(0))).alias("s"),
-            F.size(F.regexp_extract_all("text", F.lit(URL_PATTERN), F.lit(0))).alias("l"),
-        )
+        posts.select("subreddit", "author", "text_length", "sentiment",
+                     "created_time", *_ref_counts())
+        .rollup("subreddit")
         .agg(
-            F.sum("u").cast("double").alias("total_user_refs"),
-            F.sum("s").cast("double").alias("total_sub_refs"),
-            F.sum("l").cast("double").alias("total_urls"),
+            F.grouping_id().alias("g"),
+            F.count(F.lit(1)).alias("post_count"),
+            F.approx_count_distinct("author").alias("unique_authors"),
+            F.round(F.avg("text_length"), 6).alias("avg_length"),
+            F.round(F.avg("sentiment"), 6).alias("average_sentiment"),
+            *_ref_sums(),
+            F.unix_micros(F.max("created_time")).alias("ts_micros"),
         )
     )
+
+
+def write_batch_aggregates(spark: SparkSession, sinks: PostsSinks, batch_id: int,
+                           rows: list) -> None:
+    """The collected `batch_rollup` rows → the sentiment, subreddit_stats
+    and references sinks, each batch's rows in its own fixed-name file."""
+    total = next((r for r in rows if r.g == 1), None)
+    if total is None:
+        # no valid post: the rollup has no rows, where a plain aggregate
+        # still gives one all-null row
+        sentiment, refs, stamp = None, (None,) * len(_REF_COUNTS), None
+    else:
+        sentiment, stamp = total.average_sentiment, total.ts_micros
+        refs = tuple(total[t] for *_, t in _REF_COUNTS)
+    # A1: batch event-time stamp, deterministic fallback (the reference
+    # falls back to now(), reddit_consumer.py:315-317): the instant
+    # `F.lit(EPOCH_FALLBACK)` denotes, the naive datetime read in the
+    # process's local time
+    if stamp is None:
+        stamp = int(time.mktime(EPOCH_FALLBACK.timetuple())) * 1_000_000
+    groups = sorted(
+        (r for r in rows if r.g == 0),
+        key=lambda r: (-r.post_count, r.subreddit is not None, r.subreddit or ""),
+    )
+    name = f"batch-{batch_id:010d}.parquet"
+    write_driver_rows(spark, sinks.sentiment_dir, name, SENTIMENT_SCHEMA,
+                      [(stamp, sentiment)])
+    write_driver_rows(spark, sinks.stats_dir, name, STATS_SCHEMA,
+                      [(r.subreddit, r.post_count, r.unique_authors, r.avg_length, stamp)
+                       for r in groups])
+    write_driver_rows(spark, sinks.refs_dir, name, REFS_SCHEMA,
+                      [(stamp, *refs)])
 
 
 def process_posts_batch(batch_df: DataFrame, batch_id: int, sinks: PostsSinks) -> None:
     batch_df.persist()
     try:
+        # A9: a zero-line batch writes nothing (an empty Spark write would
+        # still leave a schema-only file in raw and processed)
         if batch_df.isEmpty():
             return
         # K1: raw wire append — keepalives and malformed lines included,
@@ -110,43 +194,16 @@ def process_posts_batch(batch_df: DataFrame, batch_id: int, sinks: PostsSinks) -
 
         posts = enrich_posts(batch_df).persist()
         try:
-            # A1: batch event-time stamp, deterministic fallback (the
-            # reference falls back to now(), reddit_consumer.py:315-317)
-            batch_time = posts.agg(F.max("created_time")).first()[0] or EPOCH_FALLBACK
-            stamp = F.lit(batch_time)
-
             # K2: processed posts append (reference: one overwrite-file per
             # batch, reddit_consumer.py:321-327 — append scales, files don't)
             posts.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
                 sinks.processed_dir
             )
-
-            # A3/K3: sentiment(timestamp, average_sentiment)
-            (
-                posts.agg(F.round(F.avg("sentiment"), 6).alias("average_sentiment"))
-                .select(stamp.alias("timestamp"), "average_sentiment")
-                .write.mode("append")
-                .parquet(sinks.sentiment_dir)
-            )
-
-            # A4/A5/K3: subreddit_stats
-            (
-                subreddit_stats_frame(posts)
-                .withColumn("timestamp", stamp)
-                .write.mode("append")
-                .parquet(sinks.stats_dir)
-            )
-
-            # A7/A8/K3: references totals
-            (
-                references_totals_frame(posts)
-                .select(stamp.alias("timestamp"), "total_user_refs",
-                        "total_sub_refs", "total_urls")
-                .write.mode("append")
-                .parquet(sinks.refs_dir)
-            )
+            rows = batch_rollup(posts).collect()
         finally:
             posts.unpersist()
+        # A3/A4/A5/A7/A8 → K3
+        write_batch_aggregates(batch_df.sparkSession, sinks, batch_id, rows)
 
         if sinks.retention_bytes:
             for d in sinks.dirs():

@@ -37,10 +37,14 @@ it cost ~1.4 s of job overhead per batch (measured r13, sf0.001 ingest
 drain) for a ~1 KB file, so on a local filesystem it is written
 driver-side with pyarrow in the same layout, readable by the same
 `spark.read.parquet(stats_dir)`. Other filesystems keep the Spark write.
+The same writer (`write_driver_rows`) persists the posts consumer's
+per-batch aggregate rows (`streaming/posts.py`): one file per batch
+under a fixed name, so a replayed batch replaces its own rows.
 """
 
 from __future__ import annotations
 
+import datetime
 import glob
 import os
 import shutil
@@ -48,6 +52,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -148,39 +153,73 @@ def write_partition(frame: DataFrame, out_dir: str, batch_id: int,
     return {n: int(v) for n, v in obs.get.items()} if counts else {}
 
 
+_ARROW_TYPES = {"bigint": "int64", "double": "float64", "string": "string",
+                "timestamp": "timestamp[us]"}
+
+
+def write_driver_rows(spark: SparkSession, out_dir: str, name: str,
+                      schema: StructType, rows: list[tuple],
+                      mode: str = "append") -> str | None:
+    """Persist `rows`, a handful the driver already holds, as the one
+    parquet file `out_dir/name`; timestamp columns carry epoch
+    microseconds. Returns the local directory written, or None after the
+    Spark fallback.
+
+    On a local filesystem the file is written with pyarrow to a
+    dot-prefixed temp (readers ignore dot-files) and committed by an
+    atomic `os.replace` onto the fixed name, so rewriting the same name
+    replaces the old rows whole and a crash leaves them old or new, never
+    torn. Timestamps are INT96, as Spark writes them by default. Other
+    filesystems get a Spark write of the same rows with `mode`, under
+    Spark's own file names.
+    """
+    fs, hpath = hadoop_fs(spark, out_dir)
+    if fs.getUri().getScheme() != "file":
+        stamps = [isinstance(f.dataType, TimestampType) for f in schema]
+        epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+        spark.createDataFrame(
+            [tuple(epoch + datetime.timedelta(microseconds=v) if ts and v is not None
+                   else v for v, ts in zip(r, stamps)) for r in rows],
+            schema,
+        ).coalesce(1).write.mode(mode).parquet(out_dir)
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # the URI's own path: "file:/x" must land in /x, not ./file:/x
+    local = fs.makeQualified(hpath(out_dir)).toUri().getPath()
+    os.makedirs(local, exist_ok=True)
+    fields = [pa.field(f.name, pa.type_for_alias(_ARROW_TYPES[f.dataType.simpleString()]),
+                       f.nullable) for f in schema]
+    columns = list(zip(*rows)) or [()] * len(fields)
+    table = pa.table([pa.array(c, type=f.type) for c, f in zip(columns, fields)],
+                     schema=pa.schema(fields))
+    tmp = os.path.join(local, f".{name}.tmp")
+    pq.write_table(table, tmp, use_deprecated_int96_timestamps=True)
+    os.replace(tmp, os.path.join(local, name))
+    return local
+
+
 def write_stats_row(spark: SparkSession, stats_dir: str, batch_id: int,
                     schema: str, values: tuple) -> None:
     """Write the batch's single stats row into `stats_dir/batch_id=N`.
 
     `schema` is a DDL string of int64 columns; `values` the row,
-    positionally. On a local filesystem the row lands under a fixed
-    committed name via an atomic `os.replace` from a dot-prefixed temp
-    (Spark's parquet reader ignores dot-files), and only then are other
-    visible files removed — a crash at any point leaves a committed row,
+    positionally. The row is committed under a fixed name
+    (`write_driver_rows`), and only then are other visible files of the
+    partition removed, so a crash at any point leaves a committed row,
     old or new, never a torn or missing one.
     """
-    part_dir = os.path.join(stats_dir, f"batch_id={batch_id}")
-    fs, hpath = hadoop_fs(spark, part_dir)
-    if fs.getUri().getScheme() != "file":
-        spark.createDataFrame([tuple(values)], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # the URI's own path: "file:/x" must land in /x, not ./file:/x
-    part_dir = fs.makeQualified(hpath(part_dir)).toUri().getPath()
-    os.makedirs(part_dir, exist_ok=True)
     names = [c.strip().split()[0] for c in schema.split(",")]
-    table = pa.table(
-        {n: pa.array([int(v)], type=pa.int64()) for n, v in zip(names, values)}
+    local = write_driver_rows(
+        spark, os.path.join(stats_dir, f"batch_id={batch_id}"), "part-00000.parquet",
+        StructType([StructField(n, LongType()) for n in names]),
+        [tuple(int(v) for v in values)], mode="overwrite",
     )
-    tmp = os.path.join(part_dir, ".part-00000.parquet.tmp")
-    committed = os.path.join(part_dir, "part-00000.parquet")
-    pq.write_table(table, tmp)
-    os.replace(tmp, committed)
-    for f in glob.glob(os.path.join(part_dir, "*")):
+    if local is None:
+        return
+    committed = os.path.join(local, "part-00000.parquet")
+    for f in glob.glob(os.path.join(local, "*")):
         if f == committed:
             continue
         if os.path.isdir(f):

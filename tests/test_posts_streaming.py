@@ -3,6 +3,7 @@ socket-source parity."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import socket
@@ -248,3 +249,167 @@ def test_posts_batch_result_tables_query(spark, sf_dir, duck):
     assert (g["n_posts"] == e["n_posts"]).all()
     assert (g["total_user_refs"] == e["total_user_refs"]).all()
     assert abs(g["average_sentiment"] - e["average_sentiment"]).max() < 1e-6
+
+
+AGGREGATE_SINKS = ("sentiment_dir", "stats_dir", "refs_dir")
+
+
+def _drain_posts(spark, wire_dir, out_root):
+    q = P.start_posts_pipeline(read_wire_stream(spark, wire_dir), out_root)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _rows(spark, path):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_posts_batch_job_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """One micro-batch of the posts consumer costs at most 5 Spark jobs:
+    isEmpty, the raw and processed appends and one collected rollup (two
+    jobs with AQE on). The three aggregate sinks are written on the
+    driver, not by jobs."""
+    import uuid
+
+    wire_dir = str(tmp_path / "wire")
+    write_wire_chunks(synthetic_wire(spark, sf_dir), wire_dir, n_chunks=1)
+    sc = spark.sparkContext
+    real = P.process_posts_batch
+    jobs = {}
+
+    def counted(df, bid, sinks):
+        group = f"posts-batch-{bid}-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            real(df, bid, sinks)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        jobs[bid] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    monkeypatch.setattr(P, "process_posts_batch", counted)
+    out_root = str(tmp_path / "out")
+    _drain_posts(spark, wire_dir, out_root)
+    assert list(jobs) == [0]
+    assert 1 <= jobs[0] <= 5, jobs
+
+
+def test_posts_aggregate_sinks_survive_crash_replay(spark, sf_dir, tmp_path, monkeypatch):
+    """A crash after batch 1's sink writes but before its checkpoint
+    commit re-runs batch 1 on restart. Each batch's aggregate rows live in
+    one fixed-name file, so the replay overwrites them: the sentiment,
+    subreddit_stats and references multisets equal an uninterrupted
+    control's. (Raw and processed are appends and still duplicate the
+    replayed batch.)"""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    wire_dir = str(tmp_path / "wire")
+    write_wire_chunks(synthetic_wire(spark, sf_dir), wire_dir, n_chunks=3)
+    ctrl = str(tmp_path / "ctrl")
+    _drain_posts(spark, wire_dir, ctrl)
+
+    real = P.process_posts_batch
+    crashed = []
+
+    def crash_after_side_effects(df, bid, sinks):
+        real(df, bid, sinks)
+        if bid == 1 and not crashed:
+            crashed.append(bid)
+            raise RuntimeError("chaos: crash after side effects, before commit")
+
+    chaos = str(tmp_path / "chaos")
+    with monkeypatch.context() as m:
+        m.setattr(P, "process_posts_batch", crash_after_side_effects)
+        try:
+            _drain_posts(spark, wire_dir, chaos)
+        except StreamingQueryException:
+            pass
+    assert crashed == [1]
+    _drain_posts(spark, wire_dir, chaos)  # resume: batch 1 replays
+
+    c, x = P.PostsSinks(ctrl), P.PostsSinks(chaos)
+    for d in AGGREGATE_SINKS:
+        assert _rows(spark, getattr(x, d)) == _rows(spark, getattr(c, d)), d
+    n = spark.read.parquet(c.sentiment_dir).count()
+    assert n == 3
+    # the appends still hold the replayed batch twice
+    assert spark.read.parquet(x.raw_dir).count() > spark.read.parquet(c.raw_dir).count()
+
+
+def test_posts_consumer_file_uri_root(spark, sf_dir, tmp_path, monkeypatch):
+    """A Hadoop-style `file:/x` output root is local: the driver-written
+    aggregate files land in /x, where spark.read.parquet finds them, and
+    not in a relative `./file:/x` tree under the working directory."""
+    monkeypatch.chdir(tmp_path)
+    wire_dir = str(tmp_path / "wire")
+    write_wire_chunks(synthetic_wire(spark, sf_dir), wire_dir, n_chunks=2)
+    out_root = "file:" + str(tmp_path / "out")
+    _drain_posts(spark, wire_dir, out_root)
+    sinks = P.PostsSinks(out_root)
+    n_batches = spark.read.parquet(sinks.processed_dir).select("batch_id").distinct().count()
+    assert spark.read.parquet(sinks.sentiment_dir).count() == n_batches == 2
+    assert spark.read.parquet(sinks.refs_dir).count() == n_batches
+    stats = spark.read.parquet(sinks.stats_dir)
+    assert stats.agg(F.sum("post_count")).first()[0] == (
+        spark.read.parquet(sinks.processed_dir).count()
+    )
+    assert not (tmp_path / "file:").exists()
+
+
+def test_posts_edge_batches_keep_their_rows(spark, tmp_path):
+    """A zero-line batch writes no data file to any sink. A batch with
+    lines but no valid post writes its raw lines, one sentiment row and
+    one references row stamped EPOCH_FALLBACK with null values, and no
+    subreddit_stats row — the rows a plain per-batch aggregate gives."""
+    wire_dir = tmp_path / "wire"
+    wire_dir.mkdir()
+    out_root = str(tmp_path / "out")
+    sinks = P.PostsSinks(out_root)
+    base = time.time() - 100
+
+    def add(name, lines, k):
+        path = wire_dir / name
+        path.write_text("".join(line + "\n" for line in lines))
+        os.utime(path, (base + k, base + k))
+
+    def data_files():
+        return [f for d in sinks.dirs() if os.path.isdir(d)
+                for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith(".")]
+
+    add("w0.txt", [], 0)
+    _drain_posts(spark, str(wire_dir), out_root)
+    assert data_files() == []
+
+    invalid = [
+        json.dumps({"type": "keepalive", "created_utc": 1704067200.0}),
+        "not json at all",
+        json.dumps({"type": "submission", "subreddit": "s", "id": "1", "text": "too short",
+                    "created_utc": 1704067201.0, "author": "a"}),
+    ]
+    valid = [
+        json.dumps({"type": "submission", "subreddit": f"sub{i % 2}", "id": str(10 + i),
+                    "text": f"a good happy post about /r/python number {i}",
+                    "created_utc": 1704067300.0 + i, "author": f"user{i}"})
+        for i in range(4)
+    ]
+    add("w1.txt", invalid, 1)
+    add("w2.txt", valid, 2)
+    _drain_posts(spark, str(wire_dir), out_root)
+
+    raw = spark.read.parquet(sinks.raw_dir)
+    assert sorted(r.value for r in raw.collect()) == sorted(invalid + valid)
+    sent = spark.read.parquet(sinks.sentiment_dir).orderBy("timestamp").collect()
+    refs = spark.read.parquet(sinks.refs_dir).orderBy("timestamp").collect()
+    assert len(sent) == len(refs) == 2
+    assert tuple(sent[0]) == (P.EPOCH_FALLBACK, None)
+    assert tuple(refs[0]) == (P.EPOCH_FALLBACK, None, None, None)
+    stamp = datetime.datetime.fromtimestamp(1704067303)
+    assert sent[1].timestamp == refs[1].timestamp == stamp
+    assert tuple(refs[1])[1:] == (0.0, 4.0, 0.0)
+    stats = spark.read.parquet(sinks.stats_dir).collect()
+    assert sorted((r.subreddit, r.post_count, r.timestamp) for r in stats) == [
+        ("sub0", 2, stamp), ("sub1", 2, stamp)]

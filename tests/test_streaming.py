@@ -1669,6 +1669,50 @@ def test_write_stats_row_file_scheme_uri(spark, tmp_path, monkeypatch):
     assert not (tmp_path / "file:").exists()
 
 
+def test_write_driver_rows_spark_fallback_matches_pyarrow(spark, tmp_path, monkeypatch):
+    """Off a local filesystem the driver-side writer falls back to a Spark
+    write of the same rows: timestamps given as epoch micros, nulls and
+    types read back exactly as the pyarrow file's do."""
+    import types
+
+    from pyspark.sql.types import (
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from reddit_sentiment_spark_streaming_pipeline_spark.streaming import stats as S
+
+    schema = StructType([
+        StructField("timestamp", TimestampType(), False),
+        StructField("name", StringType()),
+        StructField("value", DoubleType()),
+    ])
+    rows = [(1735689723_000_007, "a", 0.5), (0, None, None)]
+    local_dir = str(tmp_path / "local")
+    assert S.write_driver_rows(spark, local_dir, "b.parquet", schema, rows) == local_dir
+
+    real = S.hadoop_fs
+
+    def remote(spark_, path):
+        fs, hpath = real(spark_, path)
+        uri = types.SimpleNamespace(getScheme=lambda: "hdfs")
+        return types.SimpleNamespace(getUri=lambda: uri), hpath
+
+    monkeypatch.setattr(S, "hadoop_fs", remote)
+    remote_dir = str(tmp_path / "remote")
+    assert S.write_driver_rows(spark, remote_dir, "b.parquet", schema, rows) is None
+
+    a, b = spark.read.parquet(local_dir), spark.read.parquet(remote_dir)
+    assert a.dtypes == b.dtypes == [("timestamp", "timestamp"), ("name", "string"),
+                                    ("value", "double")]
+    assert sorted(a.collect()) == sorted(b.collect())
+    micros = sorted(r[0] for r in b.select(F.unix_micros("timestamp")).collect())
+    assert micros == [0, 1735689723_000_007]
+
+
 def test_write_stats_row_rewrite_crash_keeps_committed_row(spark, tmp_path, monkeypatch):
     """A replay's rewrite that dies before its atomic commit must leave
     the previously committed row readable: the new row is committed by
