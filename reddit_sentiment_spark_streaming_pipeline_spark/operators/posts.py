@@ -20,7 +20,7 @@ scan; at 100 TB this is embarrassingly parallel and I/O-bound.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window
@@ -44,29 +44,69 @@ POST_SCHEMA = T.StructType(
 _EPOCH_2024 = 1704067200
 
 
-def parse_posts(wire: DataFrame, value_col: str = "value") -> DataFrame:
-    """P1/P2/P3 on a wire DataFrame of JSON lines.
+# The flag `tag_posts` gives each wire line: true where the line is a post
+# that survives P2.
+POST_VALID = "post_valid"
 
-    Works identically on a batch frame and a streaming frame (the socket /
-    file-replay source both yield `value: string`). When the source carries
-    an arrival timestamp (the socket source with includeTimestamp, A2's
-    `ingest_time` at reddit_consumer.py:299), it is kept under that name.
-    """
+
+def _parsed(wire: DataFrame, value_col: str, keep: list[str]) -> DataFrame:
+    """P1: the `keep` wire columns, then the post fields of each line
+    (from_json in PERMISSIVE mode: a malformed line gives all nulls). When
+    the source carries an arrival timestamp (the socket source with
+    includeTimestamp, A2's `ingest_time` at reddit_consumer.py:299), it is
+    kept under that name."""
     data = F.from_json(F.col(value_col), POST_SCHEMA)
     carried = (
         [F.col("timestamp").alias("ingest_time")] if "timestamp" in wire.columns else []
     )
+    return wire.withColumn("data", data).select(*keep, "data.*", *carried)
+
+
+def _post_rule() -> tuple[Column, dict[str, Column]]:
+    """P2/P3, the one definition: the survivor predicate over the parsed
+    post fields, and the columns derived for a survivor."""
+    text = F.col("text")
+    valid = (
+        text.isNotNull()
+        & (text != "")
+        & (F.length(text) > 10)
+        & (F.col("type") != "keepalive")
+    )
+    derived = {
+        "created_time": F.col("created_utc").cast("timestamp"),
+        "text_length": F.length(text),
+    }
+    return valid, derived
+
+
+def parse_posts(wire: DataFrame, value_col: str = "value") -> DataFrame:
+    """P1/P2/P3 on a wire DataFrame of JSON lines: the posts relation.
+
+    Works identically on a batch frame and a streaming frame (the socket /
+    file-replay source both yield `value: string`).
+    """
+    valid, derived = _post_rule()
     return (
-        wire.withColumn("data", data)
-        .select("data.*", *carried)
-        .filter(
-            F.col("text").isNotNull()
-            & (F.col("text") != "")
-            & (F.length("text") > 10)
-            & (F.col("type") != "keepalive")
-        )
-        .withColumn("created_time", F.col("created_utc").cast("timestamp"))
-        .withColumn("text_length", F.length("text"))
+        _parsed(wire, value_col, [])
+        .filter(valid)
+        .select("*", *(c.alias(name) for name, c in derived.items()))
+    )
+
+
+def tag_posts(wire: DataFrame, value_col: str = "value") -> DataFrame:
+    """P1/P2/P3 with no line dropped: each wire line keeps its wire
+    columns and gains the posts relation's columns plus `POST_VALID`.
+    `tag_posts(w).filter(POST_VALID)` holds the rows of `parse_posts(w)`,
+    each beside its wire columns.
+
+    The derived columns are null on a line the flag drops, so a keepalive
+    or too-short line never runs the timestamp cast (under ANSI a NaN
+    `created_utc` would fail the whole batch)."""
+    valid, derived = _post_rule()
+    return _parsed(wire, value_col, wire.columns).select(
+        "*",
+        *(F.when(valid, c).alias(name) for name, c in derived.items()),
+        F.coalesce(valid, F.lit(False)).alias(POST_VALID),
     )
 
 

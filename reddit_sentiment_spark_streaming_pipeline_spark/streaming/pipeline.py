@@ -22,7 +22,6 @@ the checkpoint.
 
 from __future__ import annotations
 
-import datetime
 import os
 
 from pyspark.sql import DataFrame
@@ -31,9 +30,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from reddit_sentiment_spark_streaming_pipeline_spark.operators.events import event_stats_frame, valid_events
 from reddit_sentiment_spark_streaming_pipeline_spark.operators.windows import tumbling_counts_frame
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming import EPOCH_FALLBACK
 from reddit_sentiment_spark_streaming_pipeline_spark.streaming.retention import enforce_retention
 
-EPOCH_FALLBACK = datetime.datetime(1970, 1, 1)
 WATERMARK = "2 hours"
 
 

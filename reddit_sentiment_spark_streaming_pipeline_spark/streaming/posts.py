@@ -1,9 +1,13 @@
 """The reference's full per-batch analytics over the wire stream.
 
 This is the complete `process_batch` (reddit_consumer.py:282-444) re-built
-idiomatically: one persisted parse of the micro-batch feeds every sink —
-the reference recomputed the parse/filter/UDF pipeline for each of its ~10
-actions per batch (SURVEY §3.1, X9).
+idiomatically. The parse, the P2 filter and sentiment run inside the
+streaming query (`operators/posts.py::tag_posts` plus `with_sentiment`),
+so the engine analyses that plan once per query, not once per micro-batch,
+and each batch arrives as every wire line tagged with its post columns,
+`sentiment` and a validity flag. The batch is persisted once and feeds
+every sink; the reference recomputed the parse/filter/UDF pipeline for
+each of its ~10 actions per batch (SURVEY §3.1, X9).
 
 Result tables (exact reference shapes):
 - ``sentiment(timestamp, average_sentiment)`` — one row per micro-batch
@@ -19,17 +23,22 @@ Plus raw wire append (K1) and the processed posts table (K2 made an append
 to one directory instead of one overwrite-file per batch).
 
 Per micro-batch (`process_posts_batch`) five Spark jobs run: `isEmpty`,
-the raw append, the processed append, and ONE aggregate over the
-persisted posts — `rollup("subreddit")`, a grand-total row plus one row
-per subreddit — collected to the driver (two jobs: AQE stays on for
-frames built inside foreachBatch, so the shuffle map stage is its own
-job). Its cardinality is bounded by the number of subreddits, not by the
-batch. The driver writes the three aggregate tables with pyarrow
-(`streaming/stats.py` `write_driver_rows`), each batch's rows as
-`batch-{N:010d}.parquet` in the sink's flat directory: on batches this
-small, job scheduling rather than row work sets the trigger time, and a
-Spark write would cost a job per table. Timestamps are built from the
-collected epoch micros, so no time zone can shift them. unique_authors
+the raw append (the wire columns), the processed append (the valid lines'
+post columns), and ONE aggregate over the valid lines —
+`rollup("subreddit")`, a grand-total row plus one row per subreddit —
+collected to the driver (two jobs: AQE stays on for frames built inside
+foreachBatch, so the shuffle map stage is its own job). Its cardinality
+is bounded by the number of subreddits, not by the batch. These steps
+only select, filter and aggregate the batch, with Columns
+`PostsBatchPlan` built when the query started, so the driver analyses a
+few operators over one relation per batch. The driver writes the three
+aggregate tables with pyarrow (`streaming/stats.py` `write_driver_rows`),
+each batch's rows as `batch-{N:010d}.parquet` in the sink's flat
+directory: on batches this small, job scheduling rather than row work
+sets the trigger time, and a Spark write would cost a job per table.
+Timestamps are built from the collected epoch micros, and a batch with no
+valid post is stamped epoch 0 (`streaming.EPOCH_FALLBACK`, a UTC
+instant), so no time zone can shift them. unique_authors
 keeps approx_count_distinct (HLL++) exactly like the reference
 (reddit_consumer.py:379) — exact distinct would shuffle author strings
 per subreddit for no consumer benefit.
@@ -43,9 +52,7 @@ there (ROADMAP item 5's open half).
 
 from __future__ import annotations
 
-import datetime
 import os
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,16 +67,15 @@ from pyspark.sql.types import (
 )
 
 from reddit_sentiment_spark_streaming_pipeline_spark.functions.sentiment import with_sentiment
-from reddit_sentiment_spark_streaming_pipeline_spark.operators.posts import parse_posts
+from reddit_sentiment_spark_streaming_pipeline_spark.operators.posts import POST_VALID, parse_posts, tag_posts
 from reddit_sentiment_spark_streaming_pipeline_spark.operators.refs import (
     SUB_REF_PATTERN,
     URL_PATTERN,
     USER_REF_PATTERN,
 )
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming import EPOCH_FALLBACK
 from reddit_sentiment_spark_streaming_pipeline_spark.streaming.retention import enforce_retention
 from reddit_sentiment_spark_streaming_pipeline_spark.streaming.stats import write_driver_rows
-
-EPOCH_FALLBACK = datetime.datetime(1970, 1, 1)
 
 # per-post reference count column, its pattern, its references-sink total
 _REF_COUNTS = (("u", USER_REF_PATTERN, "total_user_refs"),
@@ -91,11 +97,14 @@ REFS_SCHEMA = StructType([_STAMP] + [StructField(t, DoubleType()) for *_, t in _
 
 
 class PostsSinks:
-    """The reference's five output tables under one root."""
+    """The reference's five output tables under one root. A running
+    query's sinks also carry its `PostsBatchPlan`."""
 
-    def __init__(self, out_root: str, retention_bytes: int | None = None):
+    def __init__(self, out_root: str, retention_bytes: int | None = None,
+                 plan: PostsBatchPlan | None = None):
         self.out_root = out_root
         self.retention_bytes = retention_bytes
+        self.plan = plan
         self.raw_dir = os.path.join(out_root, "raw")
         self.processed_dir = os.path.join(out_root, "processed")
         self.sentiment_dir = os.path.join(out_root, "sentiment")
@@ -129,29 +138,41 @@ def references_totals_frame(posts: DataFrame) -> DataFrame:
     return posts.select(*_ref_counts()).agg(*_ref_sums())
 
 
-def batch_rollup(posts: DataFrame) -> DataFrame:
-    """Every per-batch aggregate in one pass: the grand-total row
-    (`g` = 1: A1 batch time, A3 sentiment, A8 reference totals) plus one
-    row per subreddit (`g` = 0: A4/A5, reddit_consumer.py:375-384)."""
-    return (
-        posts.select("subreddit", "author", "text_length", "sentiment",
-                     "created_time", *_ref_counts())
-        .rollup("subreddit")
-        .agg(
-            F.grouping_id().alias("g"),
-            F.count(F.lit(1)).alias("post_count"),
-            F.approx_count_distinct("author").alias("unique_authors"),
-            F.round(F.avg("text_length"), 6).alias("avg_length"),
-            F.round(F.avg("sentiment"), 6).alias("average_sentiment"),
-            *_ref_sums(),
-            F.unix_micros(F.max("created_time")).alias("ts_micros"),
-        )
-    )
+def _rollup_aggs() -> list[Column]:
+    """Every per-batch aggregate, for `rollup("subreddit")`: the
+    grand-total row (`g` = 1: A1 batch time, A3 sentiment, A8 reference
+    totals) plus one row per subreddit (`g` = 0: A4/A5,
+    reddit_consumer.py:375-384)."""
+    return [
+        F.grouping_id().alias("g"),
+        F.count(F.lit(1)).alias("post_count"),
+        F.approx_count_distinct("author").alias("unique_authors"),
+        F.round(F.avg("text_length"), 6).alias("avg_length"),
+        F.round(F.avg("sentiment"), 6).alias("average_sentiment"),
+        *_ref_sums(),
+        F.unix_micros(F.max("created_time")).alias("ts_micros"),
+    ]
+
+
+class PostsBatchPlan:
+    """The Columns every micro-batch of one posts query uses, built once
+    when the query starts: the wire columns (raw), the validity flag and
+    the posts relation's columns (processed), and the rollup's inputs and
+    aggregates."""
+
+    def __init__(self, wire_columns: list[str], post_columns: list[str]):
+        self.raw = [F.col(c) for c in wire_columns]
+        self.valid = F.col(POST_VALID)
+        self.posts = [F.col(c) for c in post_columns]
+        self.rollup_inputs = [
+            F.col(c) for c in ("subreddit", "author", "text_length", "sentiment", "created_time")
+        ] + _ref_counts()
+        self.rollup_aggs = _rollup_aggs()
 
 
 def write_batch_aggregates(spark: SparkSession, sinks: PostsSinks, batch_id: int,
                            rows: list) -> None:
-    """The collected `batch_rollup` rows → the sentiment, subreddit_stats
+    """The collected rollup rows → the sentiment, subreddit_stats
     and references sinks, each batch's rows in its own fixed-name file."""
     total = next((r for r in rows if r.g == 1), None)
     if total is None:
@@ -162,11 +183,9 @@ def write_batch_aggregates(spark: SparkSession, sinks: PostsSinks, batch_id: int
         sentiment, stamp = total.average_sentiment, total.ts_micros
         refs = tuple(total[t] for *_, t in _REF_COUNTS)
     # A1: batch event-time stamp, deterministic fallback (the reference
-    # falls back to now(), reddit_consumer.py:315-317): the instant
-    # `F.lit(EPOCH_FALLBACK)` denotes, the naive datetime read in the
-    # process's local time
+    # falls back to now(), reddit_consumer.py:315-317)
     if stamp is None:
-        stamp = int(time.mktime(EPOCH_FALLBACK.timetuple())) * 1_000_000
+        stamp = int(EPOCH_FALLBACK.timestamp()) * 1_000_000
     groups = sorted(
         (r for r in rows if r.g == 0),
         key=lambda r: (-r.post_count, r.subreddit is not None, r.subreddit or ""),
@@ -182,6 +201,10 @@ def write_batch_aggregates(spark: SparkSession, sinks: PostsSinks, batch_id: int
 
 
 def process_posts_batch(batch_df: DataFrame, batch_id: int, sinks: PostsSinks) -> None:
+    """One micro-batch of `start_posts_pipeline`'s enriched lines → the
+    five sinks. Every DataFrame built here is a projection, filter or
+    aggregate of the batch over `sinks.plan`'s Columns."""
+    plan = sinks.plan
     batch_df.persist()
     try:
         # A9: a zero-line batch writes nothing (an empty Spark write would
@@ -190,18 +213,20 @@ def process_posts_batch(batch_df: DataFrame, batch_id: int, sinks: PostsSinks) -
             return
         # K1: raw wire append — keepalives and malformed lines included,
         # so the raw table is a replayable record of the stream
-        batch_df.write.mode("append").parquet(sinks.raw_dir)
+        batch_df.select(*plan.raw).write.mode("append").parquet(sinks.raw_dir)
 
-        posts = enrich_posts(batch_df).persist()
-        try:
-            # K2: processed posts append (reference: one overwrite-file per
-            # batch, reddit_consumer.py:321-327 — append scales, files don't)
-            posts.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-                sinks.processed_dir
-            )
-            rows = batch_rollup(posts).collect()
-        finally:
-            posts.unpersist()
+        posts = batch_df.filter(plan.valid)
+        # K2: processed posts append (reference: one overwrite-file per
+        # batch, reddit_consumer.py:321-327 — append scales, files don't)
+        posts.select(*plan.posts, F.lit(batch_id).alias("batch_id")).write.mode(
+            "append"
+        ).parquet(sinks.processed_dir)
+        rows = (
+            posts.select(*plan.rollup_inputs)
+            .rollup("subreddit")
+            .agg(*plan.rollup_aggs)
+            .collect()
+        )
         # A3/A4/A5/A7/A8 → K3
         write_batch_aggregates(batch_df.sparkSession, sinks, batch_id, rows)
 
@@ -263,10 +288,17 @@ def deduped_posts_stream(wire: DataFrame, watermark: str = "2 hours") -> DataFra
 
 def start_posts_pipeline(wire: DataFrame, out_root: str,
                          retention_bytes: int | None = None) -> StreamingQuery:
-    """Wire stream (`value: string`) → the five reference tables."""
-    sinks = PostsSinks(out_root, retention_bytes)
+    """Wire stream (`value: string`) → the five reference tables.
+
+    The parse, the P2 flag and sentiment are part of the streaming query,
+    so the engine analyses them once, not once per micro-batch: each batch
+    reaches `process_posts_batch` as every wire line with its wire columns
+    unchanged, its post columns, `sentiment` and `POST_VALID`."""
+    lines = with_sentiment(tag_posts(wire))
+    posts = [c for c in lines.columns if c not in wire.columns and c != POST_VALID]
+    sinks = PostsSinks(out_root, retention_bytes, PostsBatchPlan(wire.columns, posts))
     return (
-        wire.writeStream.foreachBatch(lambda df, bid: process_posts_batch(df, bid, sinks))
+        lines.writeStream.foreachBatch(lambda df, bid: process_posts_batch(df, bid, sinks))
         .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))
         .start()
     )
@@ -334,8 +366,9 @@ def posts_batch_result_tables(spark, sf_dir: str) -> DataFrame:
     not assume which chunk the engine picked up first.
 
     Fixture setup (3 tiny chunk writes) is test-scale machinery; the
-    drained pipeline itself is the production path (one persisted parse
-    per micro-batch feeding all five sinks)."""
+    drained pipeline itself is the production path (the parse planned
+    once per query, each micro-batch persisted once and feeding all five
+    sinks)."""
     import glob
     import shutil
     import tempfile

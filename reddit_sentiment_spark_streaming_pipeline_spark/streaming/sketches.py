@@ -47,8 +47,7 @@ def start_cms_stream(wire: DataFrame, out_dir: str) -> StreamingQuery:
     """Wire stream -> per-batch partial cells appended under out_dir."""
     cells_dir = os.path.join(out_dir, "cms_cells")
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        posts = parse_posts(batch_df).filter(F.col("type") == "submission")
+    def write_partial(posts: DataFrame, batch_id: int) -> None:
         (
             cms_cells(posts)
             .withColumn("batch_id", F.lit(batch_id))
@@ -56,8 +55,10 @@ def start_cms_stream(wire: DataFrame, out_dir: str) -> StreamingQuery:
             .parquet(cells_dir)
         )
 
+    # parsed and filtered in the streaming plan, analysed once per query
+    posts = parse_posts(wire).filter(F.col("type") == "submission")
     return (
-        wire.writeStream.foreachBatch(write_partial)
+        posts.writeStream.foreachBatch(write_partial)
         .option("checkpointLocation", os.path.join(out_dir, "_cms_checkpoint"))
         .start()
     )

@@ -363,7 +363,7 @@ def test_posts_consumer_file_uri_root(spark, sf_dir, tmp_path, monkeypatch):
 def test_posts_edge_batches_keep_their_rows(spark, tmp_path):
     """A zero-line batch writes no data file to any sink. A batch with
     lines but no valid post writes its raw lines, one sentiment row and
-    one references row stamped EPOCH_FALLBACK with null values, and no
+    one references row stamped epoch 0 with null values, and no
     subreddit_stats row — the rows a plain per-batch aggregate gives."""
     wire_dir = tmp_path / "wire"
     wire_dir.mkdir()
@@ -384,11 +384,16 @@ def test_posts_edge_batches_keep_their_rows(spark, tmp_path):
     _drain_posts(spark, str(wire_dir), out_root)
     assert data_files() == []
 
+    # the last two lines carry created_utc values no timestamp cast takes
+    # (ANSI raises on them); a dropped line must never reach the cast
     invalid = [
         json.dumps({"type": "keepalive", "created_utc": 1704067200.0}),
         "not json at all",
         json.dumps({"type": "submission", "subreddit": "s", "id": "1", "text": "too short",
                     "created_utc": 1704067201.0, "author": "a"}),
+        json.dumps({"type": "keepalive", "created_utc": float("nan")}),
+        json.dumps({"type": "submission", "subreddit": "s", "id": "2", "text": "too short",
+                    "created_utc": 1e300, "author": "a"}),
     ]
     valid = [
         json.dumps({"type": "submission", "subreddit": f"sub{i % 2}", "id": str(10 + i),
@@ -405,11 +410,93 @@ def test_posts_edge_batches_keep_their_rows(spark, tmp_path):
     sent = spark.read.parquet(sinks.sentiment_dir).orderBy("timestamp").collect()
     refs = spark.read.parquet(sinks.refs_dir).orderBy("timestamp").collect()
     assert len(sent) == len(refs) == 2
-    assert tuple(sent[0]) == (P.EPOCH_FALLBACK, None)
-    assert tuple(refs[0]) == (P.EPOCH_FALLBACK, None, None, None)
+    epoch = datetime.datetime.fromtimestamp(0)
+    assert tuple(sent[0]) == (epoch, None)
+    assert tuple(refs[0]) == (epoch, None, None, None)
     stamp = datetime.datetime.fromtimestamp(1704067303)
     assert sent[1].timestamp == refs[1].timestamp == stamp
     assert tuple(refs[1])[1:] == (0.0, 4.0, 0.0)
     stats = spark.read.parquet(sinks.stats_dir).collect()
     assert sorted((r.subreddit, r.post_count, r.timestamp) for r in stats) == [
         ("sub0", 2, stamp), ("sub1", 2, stamp)]
+
+
+def test_posts_plan_built_once_per_query(spark, sf_dir, tmp_path, monkeypatch):
+    """The parse, the P2 rule and sentiment are built into the streaming
+    query once when it starts; the micro-batches only project, filter and
+    aggregate that query's output."""
+    from reddit_sentiment_spark_streaming_pipeline_spark.operators import posts as O
+
+    wire_dir = str(tmp_path / "wire")
+    write_wire_chunks(synthetic_wire(spark, sf_dir), wire_dir, n_chunks=3)
+    calls = {"rule": 0, "sentiment": 0}
+
+    def counted(key, fn):
+        def wrapper(*args, **kwargs):
+            calls[key] += 1
+            return fn(*args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(O, "_post_rule", counted("rule", O._post_rule))
+    monkeypatch.setattr(P, "with_sentiment", counted("sentiment", P.with_sentiment))
+    out_root = str(tmp_path / "out")
+    _drain_posts(spark, wire_dir, out_root)
+    monkeypatch.undo()
+    n_batches = spark.read.parquet(P.PostsSinks(out_root).processed_dir).select(
+        "batch_id").distinct().count()
+    assert n_batches == 3
+    assert calls == {"rule": 1, "sentiment": 1}
+
+
+def test_posts_wire_timestamp_schema(spark, tmp_path):
+    """A wire frame carrying an arrival `timestamp` (the socket source's
+    shape) writes raw as (value, timestamp) and processed with
+    `ingest_time` right after the post fields."""
+    wire_dir = tmp_path / "wire"
+    wire_dir.mkdir()
+    (wire_dir / "w0.txt").write_text("".join(json.dumps(
+        {"type": "submission", "subreddit": "s", "id": str(i),
+         "text": f"a long enough post number {i}", "created_utc": 1704067200.0 + i,
+         "author": "a"}) + "\n" for i in range(3)) + "not json\n")
+    arrived = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    wire = read_wire_stream(spark, str(wire_dir)).withColumn("timestamp", F.lit(arrived))
+    out_root = str(tmp_path / "out")
+    q = P.start_posts_pipeline(wire, out_root)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    sinks = P.PostsSinks(out_root)
+    raw = spark.read.parquet(sinks.raw_dir)
+    assert raw.columns == ["value", "timestamp"]
+    assert raw.count() == 4
+    processed = spark.read.parquet(sinks.processed_dir)
+    assert processed.columns == [
+        "type", "subreddit", "id", "text", "created_utc", "author", "ingest_time",
+        "created_time", "text_length", "sentiment", "batch_id"]
+    assert [r.ingest_time for r in processed.collect()] == [arrived] * 3
+
+
+def test_posts_fallback_stamp_ignores_host_tz(spark, tmp_path, monkeypatch):
+    """A batch with no valid post is stamped epoch 0 whatever the host's
+    time zone: the same file drained under two TZ values writes epoch
+    micros 0 to the sentiment and references sinks both times."""
+    wire_dir = tmp_path / "wire"
+    wire_dir.mkdir()
+    (wire_dir / "w0.txt").write_text(
+        json.dumps({"type": "keepalive", "created_utc": 1704067200.0}) + "\nnot json\n")
+    for tz in ("UTC", "America/New_York"):
+        out_root = str(tmp_path / tz.replace("/", "_"))
+        with monkeypatch.context() as m:
+            m.setenv("TZ", tz)
+            time.tzset()
+            try:
+                _drain_posts(spark, str(wire_dir), out_root)
+            finally:
+                m.undo()
+                time.tzset()
+        sinks = P.PostsSinks(out_root)
+        for d in (sinks.sentiment_dir, sinks.refs_dir):
+            micros = [r[0] for r in spark.read.parquet(d).select(
+                F.unix_micros("timestamp")).collect()]
+            assert micros == [0], (tz, d, micros)
