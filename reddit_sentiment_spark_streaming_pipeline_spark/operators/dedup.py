@@ -387,6 +387,13 @@ from reddit_sentiment_spark_streaming_pipeline_spark.caching import (  # noqa: E
     release_tracked as release_verify_caches,
 )
 
+# Broadcast gate for the pair-docset verify's per-candidate-doc shingle
+# arrays: ~50k docs × ~5 KB arrays ≈ 250 MB, the most we'd ever want
+# executor-resident per join side. Past it the join falls back to
+# sort-merge (see _pair_docset_join). Read at call time, so a test or a
+# rehearsal forces the fallback by setting it to 0.
+PAIR_DOCSET_BROADCAST_MAX = 50_000
+
 
 def _pair_docset_join(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     """Join each candidate (doc_a, doc_b) pair with both docs' shingle-SET
@@ -408,11 +415,12 @@ def _pair_docset_join(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     arrays instead of a shingle⋈shingle shuffle join, so verify cost
     scales with the duplicate rate, not the corpus size. The broadcast of
     the per-doc array table is GATED on the measured candidate-doc count
-    (nearly free: the pair list is already checkpointed): broadcast hints
-    are always honored (AQE never demotes them), and at a high duplicate
-    rate the array table is candidates × doc-sized arrays — far bigger
-    than the pair list — so past the gate the join falls back to a
-    shuffle-hash hint keyed on doc id (no sort, linear, no OOM risk).
+    (PAIR_DOCSET_BROADCAST_MAX; nearly free: the pair list is already
+    checkpointed): broadcast hints are always honored (AQE never demotes
+    them), and at a high duplicate rate the array table is candidates ×
+    doc-sized arrays — far bigger than the pair list — so past the gate
+    the join falls back to a sort-merge hint keyed on doc id (spills,
+    no OOM risk; see the hint below).
     """
     # The pair list is referenced three times below (both sides of the
     # cand_docs union + the final join); without a materialization each
@@ -422,34 +430,24 @@ def _pair_docset_join(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     # lineage cut (reliable checkpoint on a lossy cluster). NOTE: this
     # makes plan construction eager (it runs the candidate pipeline); the
     # persisted intermediates it leaves behind are tracked in
-    # _LIVE_PERSISTS — see release_verify_caches(). Plan-only callers
-    # (tools/dump_plans.py) set SPARK_GRAFT_ASSUME_BROADCAST=1 to skip
-    # the materialization and the measured gate count below.
-    if not _assume_broadcast():
-        # EAGER on purpose: the first action here is cand_docs.count(),
-        # whose union references `pairs` TWICE — under a lazy checkpoint
-        # the two branches can race to fill the cache and compute the
-        # candidate pipeline twice inside that job. r13 A/B'd the lazy
-        # variant: no win outside the noise band (minhash floors bounce
-        # ±15% on this box — the same ABAB protocol read identical code
-        # 15% apart), so the deterministic single materialization stays.
-        # (The single-reference gates — embedding pairs, span rep — are
-        # lazy, where folding the materialization into the gate count
-        # saves a job with no race.)
-        pairs = pairs.localCheckpoint()
+    # _LIVE_PERSISTS — see release_verify_caches().
+    #
+    # EAGER on purpose: the first action here is cand_docs.count(), whose
+    # union references `pairs` TWICE — under a lazy checkpoint the two
+    # branches can race to fill the cache and compute the candidate
+    # pipeline twice inside that job. r13 A/B'd the lazy variant: no win
+    # outside the noise band (minhash floors bounce ±15% on this box — the
+    # same ABAB protocol read identical code 15% apart), so the
+    # deterministic single materialization stays. (The single-reference
+    # gates — embedding pairs, span rep — are lazy, where folding the
+    # materialization into the gate count saves a job with no race.)
+    pairs = pairs.localCheckpoint()
     cand_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    # ~50k docs × ~5 KB shingle arrays ≈ 250 MB: the most we'd ever want
-    # executor-resident per join side. Env override (rehearsal-only, see
-    # _env_gate) lets the scale sweep force the shuffle-hash regime and
-    # measure its linearity directly; the plan-dump hatch skips the
-    # measured count and assumes the default (broadcast) regime.
-    small = _assume_broadcast() or (
-        cand_docs.count() <= _env_gate("SPARK_GRAFT_PAIR_BROADCAST_MAX", 50_000)
-    )
+    small = cand_docs.count() <= PAIR_DOCSET_BROADCAST_MAX
     # persist: docsets feeds both join inputs below; recomputing it means
     # re-shingling the corpus twice. It cannot be unpersisted here (the
     # returned frame is lazy and still needs it), so it is tracked in
@@ -1618,42 +1616,9 @@ SPAN_NGRAM = 8
 # Broadcast gate for the span join-back's repeated-hash set (md5 strings,
 # ~60 B/row resident): 2M rows ≈ 120 MB — the most we'd ever want pinned
 # in every executor. Past it the join falls back to a shuffle-hash join
-# (see _span_frame).
+# (see _span_frame). Read at call time, like PAIR_DOCSET_BROADCAST_MAX.
 SPAN_REP_BROADCAST_MAX = 2_000_000
 
-
-def _env_gate(env_name: str, default: int) -> int:
-    """Measured-gate threshold with an env override.
-
-    The overrides exist for the scale rehearsals: setting the gate to 0
-    (e.g. SPARK_GRAFT_SPAN_REP_BROADCAST_MAX=0) forces the post-switch
-    shuffle-hash regime on the normal fixture, so its LINEARITY can be
-    measured directly instead of inferred from the plan-pinned fallback
-    shape. Unset (the default everywhere, incl. bench.py and the driver),
-    behavior is byte-identical to the hard-coded constant."""
-    import os
-
-    raw = os.environ.get(env_name)
-    if raw is None:
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        return default
-
-
-def _assume_broadcast() -> bool:
-    """Plan-dump escape hatch (SPARK_GRAFT_ASSUME_BROADCAST=1): skip the
-    measured broadcast gates' eager localCheckpoint+count so plan-only
-    operations (df.explain(), tools/dump_plans.py) run in O(plan) time.
-    The dumped plan then shows the default (broadcast) regime with the
-    gate's input subtree inlined instead of read from a checkpoint.
-    NEVER set for bench.py or the correctness sweeps — the eager
-    materialization is part of the measured query cost and the honest
-    min-of-reps story (see _span_frame's docstring)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_ASSUME_BROADCAST") == "1"
 
 # Shared CTE chain: corpus -> windows -> cross-doc repeated hashes ->
 # island-merged spans. Used by the span query and the removal-accounting
@@ -1770,10 +1735,10 @@ def _span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     `rep` per (session, sf_dir) would fix that but make bench.py's
     min-of-reps DISHONEST (rep 2 would reuse rep 1's materialization and
     under-report the query's real cost), so the per-construction run is
-    kept — the same trade _pair_docset_join already makes. Plan-only
-    callers can set SPARK_GRAFT_ASSUME_BROADCAST=1 (see
-    _assume_broadcast) to skip the eager gate entirely; bench.py and the
-    correctness sweeps never set it."""
+    kept — the same trade _pair_docset_join already makes. Leaving the
+    choice to AQE instead would shuffle the token-scale `win` frame
+    before deciding, and a lazy prototype of the gates measured slower
+    on the curation benchmark (ROADMAP item 3)."""
     corpus = dedup_corpus(spark, sf_dir)
     base = corpus.select("doc_id", F.split("text", " ").alias("w")).filter(
         F.size("w") >= SPAN_NGRAM
@@ -1794,20 +1759,14 @@ def _span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("mn") != F.col("mx"))
         .select("h")
     )
-    if _assume_broadcast():  # plan-dump escape hatch: O(plan), no count
+    # lazy: the gate count below materializes the checkpoint AND returns
+    # the count in ONE job (eager=True paid a separate materialization job
+    # running the same corpus→windows→aggregate pipeline first — r13)
+    rep = rep.localCheckpoint(eager=False)
+    if rep.count() <= SPAN_REP_BROADCAST_MAX:
         rep = F.broadcast(rep)
-    else:
-        # lazy: the gate count below materializes the checkpoint AND
-        # returns the count in ONE job (eager=True paid a separate
-        # materialization job running the same corpus→windows→aggregate
-        # pipeline first — r13, guide §1.2)
-        rep = rep.localCheckpoint(eager=False)
-        gate = _env_gate("SPARK_GRAFT_SPAN_REP_BROADCAST_MAX",
-                         SPAN_REP_BROADCAST_MAX)
-        if rep.count() <= gate:
-            rep = F.broadcast(rep)
-        else:  # boilerplate-heavy corpus: see the gate story above
-            rep = rep.hint("shuffle_hash")
+    else:  # boilerplate-heavy corpus: see the gate story above
+        rep = rep.hint("shuffle_hash")
     hits = win.join(rep, "h").select("doc_id", "pos")
     wd = Window.partitionBy("doc_id").orderBy("pos")
     prev_cov = F.max(F.col("pos") + SPAN_NGRAM).over(

@@ -64,7 +64,12 @@ def _parsed(wire: DataFrame, value_col: str, keep: list[str]) -> DataFrame:
 
 def _post_rule() -> tuple[Column, dict[str, Column]]:
     """P2/P3, the one definition: the survivor predicate over the parsed
-    post fields, and the columns derived for a survivor."""
+    post fields, and the columns derived for a survivor.
+
+    `created_time` is a try_cast: a valid post whose `created_utc` no
+    timestamp takes (NaN, 1e300) is kept with a null `created_time`, as
+    the reference's non-ANSI cast gave. Under ANSI a plain cast raises,
+    and a streaming batch that raises is replayed on every restart."""
     text = F.col("text")
     valid = (
         text.isNotNull()
@@ -73,7 +78,7 @@ def _post_rule() -> tuple[Column, dict[str, Column]]:
         & (F.col("type") != "keepalive")
     )
     derived = {
-        "created_time": F.col("created_utc").cast("timestamp"),
+        "created_time": F.col("created_utc").try_cast("timestamp"),
         "text_length": F.length(text),
     }
     return valid, derived
@@ -99,9 +104,7 @@ def tag_posts(wire: DataFrame, value_col: str = "value") -> DataFrame:
     `tag_posts(w).filter(POST_VALID)` holds the rows of `parse_posts(w)`,
     each beside its wire columns.
 
-    The derived columns are null on a line the flag drops, so a keepalive
-    or too-short line never runs the timestamp cast (under ANSI a NaN
-    `created_utc` would fail the whole batch)."""
+    The derived columns are null on a line the flag drops."""
     valid, derived = _post_rule()
     return _parsed(wire, value_col, wire.columns).select(
         "*",
@@ -279,24 +282,18 @@ def doc_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "production stream publishes per batch",
 )
 def wire_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wire = synthetic_wire(spark, sf_dir)
-    data = F.from_json(F.col("value"), POST_SCHEMA)
-    # from_json in PERMISSIVE mode yields an all-null struct for malformed
-    # lines (never a NULL struct), so malformed = the type field is null
-    # (every well-formed wire record carries one)
+    # from_json in PERMISSIVE mode yields all-null fields for a malformed
+    # line, so malformed = the type field is null (every well-formed wire
+    # record carries one); `parsed` is tag_posts' P2 flag, so the report
+    # counts exactly the posts the consumer keeps
     cat = (
-        F.when(F.col("data.type").isNull(), "malformed")
-        .when(F.col("data.type") == "keepalive", "keepalive")
-        .when(
-            F.col("data.text").isNull()
-            | (F.col("data.text") == "")
-            | (F.length("data.text") <= 10),
-            "too_short",
-        )
-        .otherwise("parsed")
+        F.when(F.col("type").isNull(), "malformed")
+        .when(F.col("type") == "keepalive", "keepalive")
+        .when(F.col(POST_VALID), "parsed")
+        .otherwise("too_short")
     )
     counts = (
-        wire.withColumn("data", data)
+        tag_posts(synthetic_wire(spark, sf_dir))
         .select(cat.alias("category"))
         .groupBy("category")
         .agg(F.count(F.lit(1)).alias("n_lines"))

@@ -256,6 +256,13 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 COSINE_DUP_THRESHOLD = 0.99
+# Broadcast gate for embedding_near_dups' verify: 50k pairs, NOT the 200k
+# a bare pair-id row count would suggest, because the second join
+# broadcasts the pair list carrying the 64-dim double embedding (~600
+# B/row with array overhead) — 50k × ~600 B ≈ 30 MB, the sizing of
+# dedup.py's PAIR_DOCSET_BROADCAST_MAX. Read at call time, so a test or a
+# rehearsal forces the sort-merge fallback by setting it to 0.
+COS_PAIR_BROADCAST_MAX = 50_000
 # SemDeDup target mean cluster size: K = max(N_CENTROIDS, ceil(N / this)).
 SEMDEDUP_CLUSTER_SIZE = 256
 
@@ -639,30 +646,17 @@ def _cos_candidate_pairs(c: DataFrame) -> DataFrame:
 )
 
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators.dedup import (
-        _assume_broadcast,
-        _env_gate,
-    )
-
     c = _cos_corpus(spark, sf_dir)
     pairs = _cos_candidate_pairs(c)
     # Verify join-back: pair list is small (∝ true near-dups, bounded by
     # the bucket cap), so it is localCheckpoint-ed (lineage cut — without
     # it each verify side re-runs the banding) and its measured count
-    # gates the broadcast, mirroring _pair_docset_join in dedup.py.
-    # Gate default 50k, NOT the 200k a bare pair-id row count would
-    # suggest: the second join broadcasts t1, which carries the 64-dim
-    # double embedding (~600 B/row with array overhead) per pair — the
-    # payload that actually ships is what must stay executor-resident,
-    # and 50k × ~600 B ≈ 30 MB matches dedup.py's gated-verify sizing.
-    if not _assume_broadcast():
-        # lazy: the gate count below materializes the checkpoint AND
-        # returns the count in ONE job (eager=True paid a separate
-        # materialization job first — r13, guide §1.2)
-        pairs = pairs.localCheckpoint(eager=False)
-    small = _assume_broadcast() or (
-        pairs.count() <= _env_gate("SPARK_GRAFT_COS_PAIR_BROADCAST_MAX", 50_000)
-    )
+    # gates the broadcast (COS_PAIR_BROADCAST_MAX), mirroring
+    # _pair_docset_join in dedup.py. Lazy: the gate count materializes the
+    # checkpoint AND returns the count in ONE job (eager=True paid a
+    # separate materialization job first — r13).
+    pairs = pairs.localCheckpoint(eager=False)
+    small = pairs.count() <= COS_PAIR_BROADCAST_MAX
     # Fallback is SORT-MERGE, not shuffle-hash: past the gate the pair
     # list is unbounded (∝ true duplicate volume — a flood corpus can
     # make it huge), and a shuffle-hash join must hold an entire build

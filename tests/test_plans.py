@@ -12,6 +12,17 @@ import contextlib
 import io
 
 from reddit_sentiment_spark_streaming_pipeline_spark import registry
+from reddit_sentiment_spark_streaming_pipeline_spark.operators import dedup, similarity
+from reddit_sentiment_spark_streaming_pipeline_spark.streaming import dedup as streaming_dedup
+
+# Every measured broadcast gate's row budget, each read at call time:
+# setting all of them to 0 puts every gated join in its fallback regime.
+GATE_BUDGETS = (
+    (dedup, "PAIR_DOCSET_BROADCAST_MAX"),
+    (dedup, "SPAN_REP_BROADCAST_MAX"),
+    (similarity, "COS_PAIR_BROADCAST_MAX"),
+    (streaming_dedup, "GATE_BATCH_BROADCAST_MAX"),
+)
 
 
 def plan_of(spark, name, sf_dir) -> str:
@@ -158,22 +169,23 @@ def test_no_query_plans_a_cartesian_product(spark, monkeypatch):
     (Scalar broadcasts appear as BroadcastNestedLoopJoin with a 1-row side
     and are fine; an unconstrained CartesianProduct at 100 TB is not.)
 
-    Runs under the plan-only hatch (SPARK_GRAFT_ASSUME_BROADCAST=1, the
-    PLANS.md / tools/dump_plans.py convention) so the handful of
-    measured-gate queries don't eagerly materialize their checkpoints —
-    this loop is O(157 plans), not O(157 executions). The hatch pins the
-    gates' BROADCAST regime; the fallback regime's join shape (merge /
-    shuffle_hash hints, also never cartesian) is asserted separately by
-    test_docset_verify_fallback_is_spillable_sort_merge and
-    test_span_joinback_broadcast_is_gated."""
-    from reddit_sentiment_spark_streaming_pipeline_spark import registry
+    Every query is built for real, so the measured broadcast gates run
+    their counts, and built twice: once at the default budgets and once
+    with every gate budget set to 0, which plans each gated join in its
+    fallback regime. The gates' tracked persists are released after each
+    build."""
+    from reddit_sentiment_spark_streaming_pipeline_spark import caching
 
-    monkeypatch.setenv("SPARK_GRAFT_ASSUME_BROADCAST", "1")
     offenders = []
-    for name in sorted(registry.load_all()):
-        plan = plan_of(spark, name, "/root/testdata/sf0.001")
-        if "CartesianProduct" in plan:
-            offenders.append(name)
+    for regime in ("default", "fallback"):
+        if regime == "fallback":
+            for module, budget in GATE_BUDGETS:
+                monkeypatch.setattr(module, budget, 0)
+        for name in sorted(registry.load_all()):
+            plan = plan_of(spark, name, "/root/testdata/sf0.001")
+            caching.release_tracked()
+            if "CartesianProduct" in plan:
+                offenders.append((regime, name))
     assert offenders == []
 
 
@@ -414,42 +426,6 @@ def test_span_joinback_broadcast_is_gated(spark, sf_dir, monkeypatch):
         df.explain("formatted")
     plan = buf.getvalue()
     assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-    # the rehearsal env override must force the same fallback without
-    # touching the module constant (how the scale sweep measures the
-    # post-switch regime's linearity)
-    monkeypatch.undo()
-    monkeypatch.setenv("SPARK_GRAFT_SPAN_REP_BROADCAST_MAX", "0")
-    df = dd._span_frame(spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "ShuffledHashJoin" in plan and "SortMergeJoin" not in plan
-
-
-def test_span_assume_broadcast_hatch_is_plan_only(spark, sf_dir, monkeypatch):
-    # SPARK_GRAFT_ASSUME_BROADCAST=1 (the tools/dump_plans.py escape
-    # hatch) must construct the span frame WITHOUT executing the gate's
-    # aggregate: no localCheckpoint call, and the plan still shows the
-    # default broadcast regime.
-    from pyspark.sql import DataFrame
-
-    from reddit_sentiment_spark_streaming_pipeline_spark.operators import dedup as dd
-
-    monkeypatch.setenv("SPARK_GRAFT_ASSUME_BROADCAST", "1")
-
-    def _boom(self, *a, **kw):  # any eager materialization is a failure
-        raise AssertionError("localCheckpoint executed under the plan-only hatch")
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", _boom)
-    df = dd._span_frame(spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
@@ -698,7 +674,7 @@ def test_docset_verify_fallback_is_spillable_sort_merge(spark, sf_dir, monkeypat
     plan = buf.getvalue()
     assert "BroadcastHashJoin" in plan
 
-    monkeypatch.setenv("SPARK_GRAFT_PAIR_BROADCAST_MAX", "0")
+    monkeypatch.setattr(dd, "PAIR_DOCSET_BROADCAST_MAX", 0)
     df = dd.minhash_near_dups(spark, sf_dir)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -706,6 +682,45 @@ def test_docset_verify_fallback_is_spillable_sort_merge(spark, sf_dir, monkeypat
     plan = buf.getvalue()
     assert "SortMergeJoin" in plan
     assert "ShuffledHashJoin" not in plan
+
+
+def test_embedding_verify_fallback_is_spillable_sort_merge(spark, sf_dir, monkeypatch):
+    # Past COS_PAIR_BROADCAST_MAX the embedding verify's pair side is
+    # unbounded and carries the 64-dim embedding per pair: the fallback
+    # must be sort-merge (spills), never shuffle-hash, whose hash relation
+    # OOM'd the r9 jitter-flood rehearsal. Default regime stays broadcast.
+    plan = plan_of(spark, "embedding_near_dups", sf_dir)
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+    monkeypatch.setattr(similarity, "COS_PAIR_BROADCAST_MAX", 0)
+    plan = plan_of(spark, "embedding_near_dups", sf_dir)
+    assert "SortMergeJoin" in plan
+    assert "ShuffledHashJoin" not in plan
+
+
+def test_gated_queries_return_identical_rows_in_both_regimes(spark, sf_dir, monkeypatch):
+    # A gate picks the join's physics, never its answer: each batch-gated
+    # query returns the same rows at the default budgets and with every
+    # budget at 0 (all fallbacks executed, not only planned).
+    from collections import Counter
+
+    from reddit_sentiment_spark_streaming_pipeline_spark import caching
+
+    names = ("minhash_near_dups", "containment_pairs", "embedding_near_dups",
+             "repeated_ngram_spans")
+
+    def rows(name):
+        got = Counter(tuple(r) for r in registry.get(name).fn(spark, sf_dir).collect())
+        caching.release_tracked()
+        return got
+
+    default = {name: rows(name) for name in names}
+    for module, budget in GATE_BUDGETS:
+        monkeypatch.setattr(module, budget, 0)
+    for name in names:
+        assert default[name], name
+        assert rows(name) == default[name], name
 
 
 def test_selection_gate_scoring_is_single_exchange(spark, sf_dir, tmp_path):

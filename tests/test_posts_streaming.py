@@ -500,3 +500,34 @@ def test_posts_fallback_stamp_ignores_host_tz(spark, tmp_path, monkeypatch):
             micros = [r[0] for r in spark.read.parquet(d).select(
                 F.unix_micros("timestamp")).collect()]
             assert micros == [0], (tz, d, micros)
+
+
+def test_posts_unrepresentable_created_utc_keeps_draining(spark, tmp_path):
+    """A valid post whose `created_utc` no timestamp takes (NaN, 1e300)
+    is kept with a null `created_time`; the batch commits and the next
+    file drains. Under ANSI a plain cast would fail the batch on every
+    restart."""
+    wire_dir = tmp_path / "wire"
+    wire_dir.mkdir()
+    out_root = str(tmp_path / "out")
+    base = time.time() - 100
+
+    def add(name, created, k):
+        path = wire_dir / name
+        path.write_text("".join(json.dumps(
+            {"type": "submission", "subreddit": "s", "id": f"{name}-{i}",
+             "text": f"a long enough post number {i}", "created_utc": c,
+             "author": "a"}) + "\n" for i, c in enumerate(created)))
+        os.utime(path, (base + k, base + k))
+
+    add("w0.txt", [float("nan"), 1e300, 1704067200.0], 0)
+    _drain_posts(spark, str(wire_dir), out_root)
+    processed = P.PostsSinks(out_root).processed_dir
+    got = sorted((r.id, r.created_time) for r in spark.read.parquet(processed).collect())
+    stamp = datetime.datetime.fromtimestamp(1704067200)
+    assert got == [("w0.txt-0", None), ("w0.txt-1", None), ("w0.txt-2", stamp)]
+
+    add("w1.txt", [1704067201.0], 1)
+    _drain_posts(spark, str(wire_dir), out_root)
+    ids = sorted(r.id for r in spark.read.parquet(processed).collect())
+    assert ids == ["w0.txt-0", "w0.txt-1", "w0.txt-2", "w1.txt-0"]

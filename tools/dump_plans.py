@@ -28,12 +28,6 @@ def main() -> None:
     sys.path.insert(0, _REPO)
     import bench
 
-    # Plan-dump escape hatch: the measured broadcast gates (span join-back,
-    # pair-docset verify) otherwise EXECUTE an aggregate during query
-    # construction; a plan dump wants O(plan) time and the default
-    # (broadcast) regime's shape. bench.py never sets this, so measured
-    # timings keep paying the honest gate cost.
-    os.environ["SPARK_GRAFT_ASSUME_BROADCAST"] = "1"
     spark = get_spark("dump-plans")
     specs = registry.load_all()
     out = [
@@ -43,13 +37,6 @@ def main() -> None:
         "(regenerate after plan-affecting changes). Each query's registry "
         "scale note states the intended shape; the `explain(\"formatted\")` "
         "output below it is the proof.",
-        "",
-        "Dumped with `SPARK_GRAFT_ASSUME_BROADCAST=1`: the measured "
-        "broadcast gates (span join-back, pair-docset verify) are assumed "
-        "small, so their plans show the default broadcast regime with the "
-        "gate input's full subtree inlined instead of a checkpoint scan — "
-        "the runtime gate and its shuffle-hash fallback are plan-pinned in "
-        "`tests/test_plans.py`.",
         "",
     ]
     for name in bench.HEADLINE:

@@ -41,12 +41,15 @@ Usage: python tools/scale_rehearsal.py [sf_dir] [out_dir]
            [--replicas N] [--queries q1,q2,...]
            [--emb-perturb isometry|jitter] [--emb-deep]
            [--text-perturb cipher|spam] [--text-flood-deep]
-           [--skew zipf[:s]] [--verify-span-isolation]
+           [--skew zipf[:s]] [--verify-span-isolation] [--force-fallback]
 
 --replicas / --queries narrow the sweep for targeted deep points, e.g.
 the 30× knee-check on the iterative/clustered dedup paths (VERDICT r4
 item 4): constants like the 8 IVF centroids or the 64-id bucket cap
-could hide super-linear knees that a 10× point misses.
+could hide super-linear knees that a 10× point misses. --force-fallback
+sets the batch queries' broadcast budgets to 0 (BATCH_GATES), so every
+gated join runs its fallback regime; the artifact records them under
+`forced_gates`.
 """
 
 from __future__ import annotations
@@ -64,6 +67,7 @@ sys.path.insert(0, _REPO_ROOT)
 from pyspark.sql import functions as F  # noqa: E402
 
 from reddit_sentiment_spark_streaming_pipeline_spark import registry  # noqa: E402
+from reddit_sentiment_spark_streaming_pipeline_spark.operators import dedup, similarity  # noqa: E402
 from reddit_sentiment_spark_streaming_pipeline_spark.operators.selection import (  # noqa: E402
     DSIR_TARGET_LANG_DEFAULT,
 )
@@ -1013,14 +1017,13 @@ def _span_isolation(spark, sf_dir: str, out_dir: str) -> dict:
     return {"cross_replica_repeated_windows": cross, "ngram": SPAN_NGRAM}
 
 
-def _forced_gates() -> dict[str, str]:
-    """Broadcast-gate env overrides in effect (operators/dedup.py
-    _env_gate) — recorded in the artifact so a forced-fallback rehearsal
-    can never be mistaken for the default regime."""
-    return {
-        k: v for k, v in os.environ.items()
-        if k.startswith("SPARK_GRAFT_") and k.endswith("_BROADCAST_MAX")
-    }
+# The batch queries' measured broadcast budgets, each read at call time.
+# --force-fallback sets them to 0, so every gated join runs its fallback.
+BATCH_GATES = (
+    (dedup, "PAIR_DOCSET_BROADCAST_MAX"),
+    (dedup, "SPAN_REP_BROADCAST_MAX"),
+    (similarity, "COS_PAIR_BROADCAST_MAX"),
+)
 
 
 def main() -> None:
@@ -1058,6 +1061,14 @@ def main() -> None:
     emb_deep = "--emb-deep" in args
     if emb_deep:
         args.remove("--emb-deep")
+    # recorded in the artifact so a forced lap can never be mistaken for
+    # the default regime
+    forced_gates = {}
+    if "--force-fallback" in args:
+        args.remove("--force-fallback")
+        for module, budget in BATCH_GATES:
+            setattr(module, budget, 0)
+            forced_gates[budget] = 0
     if "--skew" in args:
         i = args.index("--skew")
         spec = args[i + 1]
@@ -1161,10 +1172,10 @@ def main() -> None:
         "rehearsal": f"{kind}_{REPLICAS}x" + (
             f"_zipf{SKEW_S}" if SKEW_S is not None else ""
         ) + ("_spam_flood" if TEXT_PERTURB == "spam" else "") + (
-            "_forced_fallback" if _forced_gates() else ""
+            "_forced_fallback" if forced_gates else ""
         ),
         **({"skew": {"law": "zipf", "s": SKEW_S}} if SKEW_S is not None else {}),
-        **({"forced_gates": _forced_gates()} if _forced_gates() else {}),
+        **({"forced_gates": forced_gates} if forced_gates else {}),
         **({"span_isolation": isolation} if isolation is not None else {}),
         **({"emb_perturb": EMB_PERTURB} if EMB_PERTURB != "isometry" else {}),
         **({"text_perturb": TEXT_PERTURB} if TEXT_PERTURB != "cipher" else {}),
